@@ -760,7 +760,7 @@ def _stage_sentinels(spark, sf_dir, landing):
             # one explicit slice (session.local_df): createDataFrame's
             # default-parallelism split + coalesce(1) stalled ~6 s PER
             # SENTINEL WRITE on scheduling 32 empty parent slices into
-            # one task (r14 jobs profile; the _write_manifest_segment
+            # one task (r14 jobs profile; the storage.Hadoop write
             # note measured the same pathology) — the cold first
             # streaming gate of every session paid ~12 s for two 2-row
             # files

@@ -125,10 +125,9 @@ def incremental_rollup(
         overwrite_partitions(rolled, rollup_path, partition_col="month")
     finally:
         rolled.unpersist()
-    from fb_ads_bigquery_etl_spark.sinks import _hadoop_fs
+    from fb_ads_bigquery_etl_spark import storage
 
+    st = storage.resolve(spark, rollup_path)
     for m in sorted(set(months) - present):
-        fs, jpath, _ = _hadoop_fs(spark, rollup_path.rstrip("/") + f"/month={m}")
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
+        st.delete(rollup_path.rstrip("/") + f"/month={m}")
     return months

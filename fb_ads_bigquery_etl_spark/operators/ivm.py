@@ -24,9 +24,9 @@ from-scratch recompute of the fully-updated join.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from fb_ads_bigquery_etl_spark import storage
 
 BUCKET_COL = "_kb"
 META_FILE = "_ivm_meta.json"  # leading _ => invisible to parquet readers
@@ -50,26 +50,12 @@ def _with_bucket(df: DataFrame, key: str, buckets: int) -> DataFrame:
     )
 
 
-def _meta_path(spark: SparkSession, path: str):
-    # a _-prefixed FILE: invisible to spark.read.parquet(path); written
-    # through the Hadoop FileSystem API (a driver-side metadata op — no
-    # Spark job) so the view works on any Hadoop-compatible filesystem,
-    # not just file://
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(os.path.join(path, META_FILE))
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath, jvm
-
-
 def _write_meta(spark: SparkSession, path: str, key: str, buckets: int) -> None:
+    # a _-prefixed FILE: invisible to spark.read.parquet(path)
     import json
 
-    fs, jpath, _ = _meta_path(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(json.dumps({"key": key, "buckets": buckets}).encode()))
-    finally:
-        out.close()
+    meta = json.dumps({"key": key, "buckets": buckets})
+    storage.resolve(spark, path).write_text(f"{path}/{META_FILE}", meta)
 
 
 def _check_meta(spark: SparkSession, path: str, key: str, buckets: int) -> None:
@@ -80,16 +66,9 @@ def _check_meta(spark: SparkSession, path: str, key: str, buckets: int) -> None:
     pass (no meta file -> no check)."""
     import json
 
-    fs, jpath, jvm = _meta_path(spark, path)
-    if not fs.exists(jpath):
+    raw = storage.resolve(spark, path).read_text(f"{path}/{META_FILE}")
+    if raw is None:
         return
-    stream = fs.open(jpath)
-    try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
     meta = json.loads(raw)
     if meta["buckets"] != buckets or meta["key"] != key:
         raise ValueError(
@@ -174,27 +153,8 @@ def apply_dim_update(
         _with_bucket(fact, key, buckets)
         .filter(F.col(BUCKET_COL).isin(touched))
         .join(F.broadcast(dim_full), key)
-        .localCheckpoint(eager=True)  # cut lineage: overwrites its own input path's partitions
     )
-    nonempty = {
-        r[0] for r in rebuilt.select(BUCKET_COL).distinct().collect()
-    }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _by_bucket(rebuilt).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    empty = [b for b in touched if b not in nonempty]
-    if empty:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for b in empty:
-            jpath = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(path, f"{BUCKET_COL}={b}")
-            )
-            fs = jpath.getFileSystem(conf)
-            fs.delete(jpath, True)
+    _overwrite_touched(spark, rebuilt, touched, path)
 
 
 def read_join_view(spark: SparkSession, path: str) -> DataFrame:
@@ -245,7 +205,9 @@ def _overwrite_touched(
 ) -> None:
     """Dynamic-partition-overwrite `df`'s buckets into `path`, dropping
     touched partition dirs whose rebuild came back empty (dynamic
-    overwrite's no-rows-no-overwrite blind spot — see apply_dim_update)."""
+    overwrite's no-rows-no-overwrite blind spot — see apply_dim_update).
+    The localCheckpoint cuts lineage: `df` may read the partitions this
+    overwrites."""
     out = df.localCheckpoint(eager=True)
     nonempty = {r[0] for r in out.select(BUCKET_COL).distinct().collect()}
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -254,16 +216,10 @@ def _overwrite_touched(
         _by_bucket(out).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    empty = [b for b in touched if b not in nonempty]
-    if empty:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for b in empty:
-            jpath = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(path, f"{BUCKET_COL}={b}")
-            )
-            fs = jpath.getFileSystem(conf)
-            fs.delete(jpath, True)
+    st = storage.resolve(spark, path)
+    for b in touched:
+        if b not in nonempty:
+            st.delete(f"{path}/{BUCKET_COL}={b}")
 
 
 def apply_max_view_append(

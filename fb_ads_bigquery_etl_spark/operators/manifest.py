@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
+
 
 def _stat_aggs(stat_cols: tuple[str, ...]):
     aggs = [F.count("*").alias("n_rows")]
@@ -42,16 +44,9 @@ def build_file_manifest(
 
 
 def _list_data_files(spark: SparkSession, path: str) -> list[str]:
-    """Driver-side directory listing via the Hadoop FileSystem API — a
-    metadata operation (one listStatus RPC), never a data read."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return [
-        st.getPath().toString()
-        for st in fs.listStatus(jpath)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
-    ]
+    """The dataset's data files through `storage` — a metadata
+    listing, never a data read."""
+    return [f for f, _, _, _ in storage.resolve(spark, path).list_files(path)]
 
 
 def update_file_manifest(
@@ -430,7 +425,7 @@ def expire_snapshot(
     so expiring v1 after an append deletes nothing, while expiring the
     pre-compaction version reclaims the small files the compaction
     replaced. All collects are metadata-sized; deletion goes through
-    the Hadoop FileSystem API (works on any supported store)."""
+    `storage` (works on any supported store)."""
     keep = {
         r["file"].rsplit("/", 1)[-1]
         for m in retained
@@ -441,9 +436,6 @@ def expire_snapshot(
         for r in expired.select("file").collect()
         if r["file"].rsplit("/", 1)[-1] not in keep
     )
-    jvm = spark._jvm
     for f in doomed:
-        jpath = jvm.org.apache.hadoop.fs.Path(f)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, False)
+        storage.resolve(spark, f).delete(f)
     return doomed

@@ -31,10 +31,9 @@ No reference counterpart (north-star extension, BASELINE.json).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.session import (
     coalesce_metadata_stages,
     local_df,
@@ -624,100 +623,40 @@ def _residuals(
     return cents, resid
 
 
-def _write_sidecar_parquet_local(dirpath: str, table) -> None:
-    """Overwrite a LOCAL metadata sidecar dir with one pyarrow-written
-    parquet file (temp name + atomic rename — a crash never leaves a
-    torn file a later fast-path read would trip on). Caller has already
-    checked _local_fs_dir. Spark reads the result like any parquet
-    dir."""
-    import shutil
-    import uuid
-
-    import pyarrow.parquet as papq
-
-    if os.path.isdir(dirpath):
-        shutil.rmtree(dirpath)
-    os.makedirs(dirpath, exist_ok=True)
-    final = os.path.join(dirpath, f"part-{uuid.uuid4().hex}.parquet")
-    tmp = f"{final}.tmp"
-    papq.write_table(table, tmp)
-    os.rename(tmp, final)
+_CENTROID_SCHEMA = "centroid_id long, cvec array<double>, cnorm double"
+_CODEBOOK_SCHEMA = "m int, c int, cw array<long>"
 
 
 def _write_centroid_sidecar(spark, cents: DataFrame, dirpath: str) -> None:
-    """Overwrite the centroid sidecar — driver-side pyarrow on a local
-    store (the table is nlist-sized metadata; a Spark write job only
-    added fixed latency per build/publish — r14), Spark write
-    elsewhere. Values round-trip exactly: the collect returns the
-    computed doubles."""
-    base = _local_fs_dir(dirpath)
-    if base is not None:
-        import pyarrow as pa
-
-        rows = cents.select("centroid_id", "cvec", "cnorm").collect()
-        table = pa.Table.from_arrays(
-            [
-                pa.array(
-                    [int(r["centroid_id"]) for r in rows], type=pa.int64()
-                ),
-                pa.array(
-                    [[float(x) for x in r["cvec"]] for r in rows],
-                    type=pa.list_(pa.float64()),
-                ),
-                pa.array(
-                    [float(r["cnorm"]) for r in rows], type=pa.float64()
-                ),
-            ],
-            names=["centroid_id", "cvec", "cnorm"],
-        )
-        _write_sidecar_parquet_local(base, table)
-        return
-    cents.write.mode("overwrite").parquet(dirpath)
+    """Overwrite the centroid sidecar with the collected (nlist-row)
+    table. Values round-trip exactly: the collect returns the computed
+    doubles."""
+    rows = [
+        (int(r["centroid_id"]), [float(x) for x in r["cvec"]],
+         float(r["cnorm"]))
+        for r in cents.select("centroid_id", "cvec", "cnorm").collect()
+    ]
+    storage.resolve(spark, dirpath).write_rows_atomic(
+        dirpath, rows, _CENTROID_SCHEMA, "overwrite"
+    )
 
 
-def _write_codebook_sidecar(spark, cb_rows: list, dirpath: str) -> None:
-    """Overwrite the codebook sidecar from driver-side (m, c, cw) rows —
-    pyarrow on a local store (zero jobs — r14), Spark write elsewhere."""
-    base = _local_fs_dir(dirpath)
-    if base is not None:
-        import pyarrow as pa
-
-        table = pa.Table.from_arrays(
-            [
-                pa.array([r[0] for r in cb_rows], type=pa.int32()),
-                pa.array([r[1] for r in cb_rows], type=pa.int32()),
-                pa.array(
-                    [[int(x) for x in r[2]] for r in cb_rows],
-                    type=pa.list_(pa.int64()),
-                ),
-            ],
-            names=["m", "c", "cw"],
-        )
-        _write_sidecar_parquet_local(base, table)
-        return
-    local_df(spark, cb_rows, "m int, c int, cw array<long>").write.mode(
-        "overwrite"
-    ).parquet(dirpath)
-
-
-def _read_sidecar_rows(spark, dirpath: str) -> list[dict]:
-    """Collect a metadata-sized sidecar table (centroids, codebooks):
-    driver-side pyarrow on a local store (no job — r14), Spark read +
-    collect elsewhere. Raises if the sidecar is missing, matching the
-    Spark read's AnalysisException contract."""
-    base = _local_fs_dir(dirpath)
-    if base is not None:
-        rows = _read_parquet_rows_local(base)
-        if rows is not None:
-            return rows
-    return [r.asDict() for r in spark.read.parquet(dirpath).collect()]
+def _read_centroids(spark, path: str) -> list[dict]:
+    """The centroid sidecar as driver-side dicts (nlist rows)."""
+    d = f"{path}_centroids"
+    rows = storage.resolve(spark, d).read_rows(d, _CENTROID_SCHEMA)
+    if rows is None:
+        raise FileNotFoundError(f"no IVF-PQ centroid sidecar at {d}")
+    return rows
 
 
 def load_codebooks(spark, path: str) -> list[list[list[int]]]:
     """Read the codebook sidecar back into the list[m][ksub][sub_dim]
-    shape every PQ kernel consumes — a metadata-sized collect (m*ksub
-    rows; pure driver work on a local store)."""
-    cb_rows = _read_sidecar_rows(spark, f"{path}_codebooks")
+    shape every PQ kernel consumes (m*ksub rows)."""
+    d = f"{path}_codebooks"
+    cb_rows = storage.resolve(spark, d).read_rows(d, _CODEBOOK_SCHEMA)
+    if cb_rows is None:
+        raise FileNotFoundError(f"no IVF-PQ codebook sidecar at {d}")
     m = 1 + max(r["m"] for r in cb_rows)
     ksub = 1 + max(r["c"] for r in cb_rows)
     cb: list[list[list[int] | None]] = [[None] * ksub for _ in range(m)]
@@ -770,11 +709,10 @@ def build_ivfpq_index(
     # a full rebuild supersedes any interrupted split: clear its
     # staged commit so the fresh index is not gated on recovery
     spark = df.sparkSession
-    fs, P = _split_fs(spark, path)
+    st = storage.resolve(spark, path)
     staged_p, scents_p, commit_p = _split_paths(path)
     for leftover in (staged_p, scents_p, commit_p, f"{commit_p}_tmp"):
-        if fs.exists(P(leftover)):
-            fs.delete(P(leftover), True)
+        st.delete(leftover)
     cents, resid = _residuals(
         df, centroids, vec_col=vec_col, id_col=id_col
     )
@@ -822,14 +760,15 @@ def build_ivfpq_index(
             codes.unpersist()
     finally:
         resid.unpersist()
-    spark = df.sparkSession
     _write_centroid_sidecar(spark, cents, f"{path}_centroids")
     cb_rows = [
         (mm, c, [int(x) for x in cw])
         for mm, cb_m in enumerate(cb)
         for c, cw in enumerate(cb_m)
     ]
-    _write_codebook_sidecar(spark, cb_rows, f"{path}_codebooks")
+    st.write_rows_atomic(
+        f"{path}_codebooks", cb_rows, _CODEBOOK_SCHEMA, "overwrite"
+    )
     # per-file stats sidecar: a fresh seq=0 snapshot from the write-
     # time stats (reset: the overwrite above retired every prior file)
     refresh_ivfpq_manifest(spark, path, precomputed=pre, reset=True)
@@ -987,21 +926,13 @@ def _split_paths(path: str) -> tuple[str, str, str]:
     )
 
 
-def _split_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    return P(path).getFileSystem(hconf), P
-
-
 def _check_no_split_inflight(spark, path: str) -> None:
     """Refuse to read or mutate an index whose bucket split crashed
     mid-commit: between the code-bucket swap and the centroid-sidecar
     swap the pair is mutually inconsistent (duplicate or unreachable
     probe results), so the commit marker gates EVERY public verb until
     the staged commit is rolled forward."""
-    fs, P = _split_fs(spark, path)
-    if fs.exists(P(_split_paths(path)[2])):
+    if storage.resolve(spark, path).exists(_split_paths(path)[2]):
         raise ValueError(
             f"interrupted bucket split/merge on {path}: a staged "
             "commit is in flight — run recover_ivfpq_split(spark, "
@@ -1020,42 +951,29 @@ def _replay_split_commit(spark, path: str) -> dict | None:
     disappears exactly when its swap lands). Returns the precomputed
     stats, or None when no commit is in flight."""
     staged, staged_cents, commit = _split_paths(path)
-    fs, P = _split_fs(spark, path)
-    if not fs.exists(P(commit)):
+    st = storage.resolve(spark, path)
+    rows = st.read_rows(commit, _SPLIT_COMMIT_SCHEMA)
+    if rows is None:
         return None
-    rows = spark.read.schema(_SPLIT_COMMIT_SCHEMA).parquet(commit).collect()
     pre: dict[int, tuple[int, int, int]] = {}
     for r in rows:
         b = int(r["bucket"])
-        live = P(f"{path}/bucket={b}")
+        live = f"{path}/bucket={b}"
         if r["op"] == "commit":
             pre[b] = (int(r["n_rows"]), int(r["min_id"]), int(r["max_id"]))
-            src_dir = P(f"{staged}/bucket={b}")
-            if fs.exists(src_dir):
-                if fs.exists(live):
-                    fs.delete(live, True)
-                _rename_or_raise(fs, src_dir, live)
-        elif fs.exists(live):
-            fs.delete(live, True)
-    scents, lcents = P(staged_cents), P(f"{path}_centroids")
-    if fs.exists(scents):
-        if fs.exists(lcents):
-            fs.delete(lcents, True)
-        _rename_or_raise(fs, scents, lcents)
+            src_dir = f"{staged}/bucket={b}"
+            if st.exists(src_dir):
+                st.delete(live)
+                st.rename(src_dir, live)
+        else:
+            st.delete(live)
+    if st.exists(staged_cents):
+        st.delete(f"{path}_centroids")
+        st.rename(staged_cents, f"{path}_centroids")
     refresh_ivfpq_manifest(spark, path, precomputed=pre)
-    fs.delete(P(commit), True)
-    fs.delete(P(staged), True)
+    st.delete(commit)
+    st.delete(staged)
     return pre
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    """Hadoop FileSystem.rename signals failure by RETURNING FALSE
-    (dst exists, missing parent, cross-FS move), not by raising — an
-    unchecked call would let a publish report success with nothing
-    swapped. The marker stays in place on failure, so a retry /
-    recover_ivfpq_split replays the commit."""
-    if not fs.rename(src, dst):
-        raise IOError(f"filesystem rename failed: {src} -> {dst}")
 
 
 def recover_ivfpq_split(spark, path: str) -> bool:
@@ -1120,8 +1038,8 @@ def split_ivfpq_bucket(
     deleted id still in `src` would resurrect into a child bucket.
     compact_ivfpq_index first. Single-writer, like every other index
     mutation. A vacated partition dir (the parent always; a donor
-    bucket emptied by strays in theory) is deleted through the
-    Hadoop FS API, and the manifest refresh records the drops.
+    bucket emptied by strays in theory) is deleted through
+    `storage`, and the manifest refresh records the drops.
 
     Crash-consistent publish: the rewritten buckets and the grown
     centroid table are STAGED, a commit marker lands, and only then do
@@ -1158,17 +1076,11 @@ def split_ivfpq_bucket(
             raise ValueError("empty index: nothing to split")
         bucket = int(hot["bucket"])
     # the rebuild below overwrites the centroid sidecar this reads —
-    # collected to a local frame (metadata-sized; pure driver work on
-    # a local store, and no max-agg job: the max is a Python max, r14)
-    crows = _read_sidecar_rows(spark, f"{path}_centroids")
+    # collected to a local frame (metadata-sized; the max is a Python
+    # max, not an agg job)
+    crows = _read_centroids(spark, path)
     cents = local_df(
-        spark,
-        [
-            (int(r["centroid_id"]), [float(x) for x in r["cvec"]],
-             float(r["cnorm"]))
-            for r in crows
-        ],
-        "centroid_id bigint, cvec array<double>, cnorm double",
+        spark, [tuple(r.values()) for r in crows], _CENTROID_SCHEMA
     )
     cb = load_codebooks(spark, path)
     max_id = max(int(r["centroid_id"]) for r in crows)
@@ -1301,10 +1213,9 @@ def _reassign_and_publish(
     # finished by recover_ivfpq_split — the code buckets and the
     # centroid table can never be read as a mismatched pair.
     staged, staged_cents, commit = _split_paths(path)
-    fs, P = _split_fs(spark, path)
+    st = storage.resolve(spark, path)
     for stale in (staged, staged_cents, f"{commit}_tmp"):
-        if fs.exists(P(stale)):
-            fs.delete(P(stale), True)
+        st.delete(stale)
     out.write.mode("overwrite").partitionBy("bucket").parquet(staged)
     _write_centroid_sidecar(spark, new_cents, staged_cents)
     plan = [
@@ -1312,22 +1223,19 @@ def _reassign_and_publish(
                 ("drop", None, None, None))
         for b in touched
     ]
-    # the marker's EXISTENCE is the commit point, but the parquet job
-    # that writes it is not atomic (a crash mid-job leaves the dir
-    # with no data files — recovery would read an EMPTY plan and swap
-    # centroids without the bucket swaps). Write the plan to a temp
-    # dir and FS-RENAME it into place: the marker path exists iff the
-    # plan inside it is complete.
-    rdd = spark.sparkContext.parallelize(plan, 1)  # single-slice: see
-    spark.createDataFrame(rdd, _SPLIT_COMMIT_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{commit}_tmp")  # _write_manifest_segment's tiny-write note
-    # the commit point: checked rename (Hadoop signals failure by
-    # returning false). NOTE: directory rename is atomic on HDFS and
+    # the marker's EXISTENCE is the commit point, but writing its
+    # contents is not atomic (a crash mid-write leaves the dir with no
+    # plan — recovery would read an EMPTY plan and swap centroids
+    # without the bucket swaps). Write the plan to a temp dir and
+    # RENAME it into place: the marker path exists iff the plan inside
+    # it is complete. NOTE: directory rename is atomic on HDFS and
     # local FS; on rename-as-copy object stores (S3A) this commit
     # protocol needs the store's own committer — same caveat class as
     # every rename-based Spark output committer.
-    _rename_or_raise(fs, P(f"{commit}_tmp"), P(commit))
+    st.write_rows_atomic(
+        f"{commit}_tmp", plan, _SPLIT_COMMIT_SCHEMA, "overwrite"
+    )
+    st.rename(f"{commit}_tmp", commit)
     _replay_split_commit(spark, path)
     return touched, n_moved
 
@@ -1385,19 +1293,12 @@ def merge_ivfpq_buckets(
             "(moved rows re-encode from the caller's corpus and would "
             "bypass logical deletes)"
         )
-    # collected to a local frame (metadata-sized; pure driver work on
-    # a local store — r14): the cold pick, the known-id check and the
-    # parent retirement all read it without touching the files the
-    # publish below replaces
-    crows = _read_sidecar_rows(spark, f"{path}_centroids")
+    # collected to a local frame (metadata-sized): the cold pick, the
+    # known-id check and the parent retirement all read it without
+    # touching the files the publish below replaces
+    crows = _read_centroids(spark, path)
     cents = local_df(
-        spark,
-        [
-            (int(r["centroid_id"]), [float(x) for x in r["cvec"]],
-             float(r["cnorm"]))
-            for r in crows
-        ],
-        "centroid_id bigint, cvec array<double>, cnorm double",
+        spark, [tuple(r.values()) for r in crows], _CENTROID_SCHEMA
     )
     explicit = buckets is not None
     if buckets is None:
@@ -1477,108 +1378,16 @@ def merge_ivfpq_buckets(
     }
 
 
-def _local_fs_dir(path: str) -> str | None:
-    """The plain local-filesystem directory behind `path` when it IS
-    local (bare path or file: URI), else None. Gate for the driver-side
-    metadata fast paths below: sidecar/manifest reads and writes are
-    METADATA-SIZED BY CONSTRUCTION (nlist buckets, per-file stats,
-    m*ksub codebook rows), so on a local store they are pure driver
-    work — scheduling a Spark job per listing/read/write only added
-    fixed job latency to every maintenance verb (guide §5: the driver
-    should do no DATA work; this is not data). Non-local stores keep
-    the JVM-side implementations unchanged."""
-    if "://" in path:
-        return None
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    return path
-
-
-def _read_parquet_rows_local(dirpath: str) -> list[dict] | None:
-    """Driver-side read of a LOCAL metadata-sized parquet dir via
-    pyarrow: list of row dicts, or None when the dir doesn't exist
-    (mirroring the AnalysisException contract of the Spark read).
-    Missing columns across files (legacy segments) read as None."""
-    import pyarrow.parquet as papq
-
-    if not os.path.isdir(dirpath):
-        return None
-    rows: list[dict] = []
-    for name in sorted(os.listdir(dirpath)):
-        if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-            continue
-        table = papq.read_table(os.path.join(dirpath, name))
-        rows.extend(table.to_pylist())
-    return rows
-
-
 def _list_code_files(spark, path: str) -> list[tuple[str, str, int, int]]:
     """Listing of the index's bucket-partitioned code files —
-    (full_path, 'bucket=X/name' suffix, size, mtime) per file. On a
-    local store the walk is one os.scandir pass on the driver (no job
-    at all — r14); elsewhere it runs JVM-SIDE through the binaryFile
-    source with only the metadata columns selected (content is never
-    read), so the cost is one small job + a file-count collect instead
-    of ~8 py4j round trips per file (measured: 2.9 s -> ~0.2 s at 473
-    files). The suffix (NOT the basename) is the file's identity:
-    streaming publishes deterministic b<id>-<seq> names whose seq
-    resets PER BUCKET DIR, so basenames alone can collide across
-    buckets."""
-    base = _local_fs_dir(path)
-    if base is not None:
-        out = []
-        if os.path.isdir(base):
-            for bdir in os.listdir(base):
-                if not bdir.startswith("bucket="):
-                    continue
-                d = os.path.join(base, bdir)
-                if not os.path.isdir(d):
-                    continue
-                with os.scandir(d) as it:
-                    for e in it:
-                        if e.name.startswith(("_", ".")) or not e.is_file():
-                            continue
-                        st = e.stat()
-                        out.append(
-                            (
-                                e.path,
-                                f"{bdir}/{e.name}",
-                                int(st.st_size),
-                                # Hadoop's LocalFileStatus mtime is
-                                # java.io.File.lastModified() — whole
-                                # milliseconds; integer ns floor-div
-                                # reproduces it exactly
-                                st.st_mtime_ns // 1_000_000,
-                            )
-                        )
-        return sorted(out, key=lambda t: t[1])
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (
-            spark.read.format("binaryFile")
-            .load(f"{path}/bucket=*")
-            .select("path", "length", "modificationTime")
-            .collect()
-        )
-    except AnalysisException:  # no bucket= dirs yet
-        return []
-    out = []
-    for r in rows:
-        full = r["path"]
-        parts = full.rsplit("/", 2)
-        name, parent = parts[-1], parts[-2]
-        if name.startswith(("_", ".")) or not parent.startswith("bucket="):
-            continue
-        out.append(
-            (
-                full,
-                f"{parent}/{name}",
-                int(r["length"]),
-                int(r["modificationTime"].timestamp() * 1000),
-            )
-        )
-    return sorted(out, key=lambda t: t[1])
+    (full_path, 'bucket=X/name' suffix, size, mtime) per file. The
+    suffix (NOT the basename) is the file's identity: streaming
+    publishes deterministic b<id>-<seq> names whose seq resets PER
+    BUCKET DIR, so basenames alone can collide across buckets."""
+    return [
+        f for f in storage.resolve(spark, path).list_files(path)
+        if f[1].startswith("bucket=") and f[1].count("/") == 1
+    ]
 
 
 _MANIFEST_SCHEMA = (
@@ -1588,58 +1397,22 @@ _MANIFEST_SCHEMA = (
 _MANIFEST_SEG_SCHEMA = _MANIFEST_SCHEMA + ", seq long, op string"
 
 
-def _read_ivfpq_manifest_segments(spark, path: str) -> DataFrame | None:
-    """Raw read of the manifest sidecar's append-only SEGMENTS (every
-    refresh appends one small file of (seq, op) rows; op is 'add' or
-    'drop'). Legacy pre-segment sidecars (plain 8-column snapshots)
-    read as one seq=0 all-'add' segment, so an index written by an
-    older build keeps working in place. Returns None if no sidecar."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        # explicit schema instead of mergeSchema: no footer-merge job,
-        # and legacy files simply read their missing seq/op as NULL
-        raw = spark.read.schema(_MANIFEST_SEG_SCHEMA).parquet(
-            f"{path}_manifest"
-        )
-    except AnalysisException:
-        return None
-    return raw.select(
-        "file", "suffix", "size", "mtime", "bucket",
-        "n_rows", "min_id", "max_id",
-        F.coalesce(F.col("seq"), F.lit(0)).cast("long").alias("seq"),
-        F.coalesce(F.col("op"), F.lit("add")).alias("op"),
-    )
-
-
 def _read_manifest_segment_rows(spark, path: str) -> list[dict] | None:
-    """Raw manifest segment rows as driver-side dicts — the refresh /
-    fold hot path. LOCAL store: one pyarrow read on the driver (no
-    Spark job); otherwise the JVM-side segment read + collect. Legacy
-    rows (no seq/op columns) normalize to seq=0 / op='add' exactly as
-    the DataFrame reader does. None = no sidecar."""
-    base = _local_fs_dir(f"{path}_manifest")
-    if base is not None:
-        raw = _read_parquet_rows_local(base)
-        if raw is None:
-            return None
-        return [
-            {
-                "file": r.get("file"),
-                "suffix": r.get("suffix"),
-                "size": r.get("size"),
-                "mtime": r.get("mtime"),
-                "bucket": r.get("bucket"),
-                "n_rows": r.get("n_rows"),
-                "min_id": r.get("min_id"),
-                "max_id": r.get("max_id"),
-                "seq": r["seq"] if r.get("seq") is not None else 0,
-                "op": r["op"] if r.get("op") is not None else "add",
-            }
-            for r in raw
-        ]
-    seg = _read_ivfpq_manifest_segments(spark, path)
-    return None if seg is None else [r.asDict() for r in seg.collect()]
+    """Raw rows of the manifest sidecar's append-only SEGMENTS (every
+    refresh appends one small file of (seq, op) rows; op is 'add' or
+    'drop') as driver-side dicts — the refresh / fold hot path. Legacy
+    pre-segment sidecars (plain 8-column snapshots, no seq/op) read as
+    one seq=0 all-'add' segment, so an index written by an older build
+    keeps working in place. None = no sidecar."""
+    rows = storage.resolve(spark, path).read_rows(
+        f"{path}_manifest", _MANIFEST_SEG_SCHEMA
+    )
+    for r in rows or []:
+        if r["seq"] is None:
+            r["seq"] = 0
+        if r["op"] is None:
+            r["op"] = "add"
+    return rows
 
 
 def _manifest_row8(r) -> tuple:
@@ -1668,31 +1441,16 @@ def _read_ivfpq_manifest(spark, path: str) -> DataFrame | None:
     """Live view of the per-file stats sidecar (`<path>_manifest`) if
     one exists, else None: segments reconciled to one row per live
     file in the original 8-column schema, so every consumer (stats,
-    compaction, envelope pruning, the gates) is segment-agnostic.
-    LOCAL store: read + reconcile on the driver (the fold is
-    metadata-sized by construction), returned as a one-slice local
-    frame — no scan job, no window shuffle (r14)."""
-    if _local_fs_dir(path) is not None:
-        rows = _read_manifest_segment_rows(spark, path)
-        if rows is None:
-            return None
-        live = _reconcile_manifest_rows(rows)
-        return local_df(
-            spark,
-            [_manifest_row8(live[s]) for s in sorted(live)],
-            _MANIFEST_SCHEMA,
-        )
-    seg = _read_ivfpq_manifest_segments(spark, path)
-    if seg is None:
+    compaction, envelope pruning, the gates) is segment-agnostic. The
+    fold runs on the driver (metadata-sized by construction) and
+    returns a one-slice local frame."""
+    rows = _read_manifest_segment_rows(spark, path)
+    if rows is None:
         return None
-    w = Window.partitionBy("suffix").orderBy(F.col("seq").desc())
-    return (
-        seg.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "add"))
-        .select(
-            "file", "suffix", "size", "mtime", "bucket",
-            "n_rows", "min_id", "max_id",
-        )
+    live = _reconcile_manifest_rows(rows)
+    return local_df(
+        spark, [_manifest_row8(live[s]) for s in sorted(live)],
+        _MANIFEST_SCHEMA,
     )
 
 
@@ -1717,102 +1475,20 @@ def _bucket_stats(codes: DataFrame) -> dict[int, tuple[int, int, int]]:
 
 
 def _scan_code_file_stats(spark, path: str, files: list[str]) -> dict:
-    """Stat code files by READING them — the crash-self-heal fallback
-    only (a writer died between data publish and manifest refresh, or
-    files appeared out-of-band); the normal write path passes
-    precomputed stats and never lands here. Returns {suffix: (n_rows,
-    min_id, max_id)}; callers backfill (0, None, None) for zero-row
-    files the grouped scan cannot see."""
-    if all(_local_fs_dir(f) is not None for f in files):
-        # self-heal fallback over a handful of LOCAL files: pyarrow
-        # column reads on the driver (the files are delete-bounded by
-        # construction; no job needed — r14)
-        import pyarrow.parquet as papq
-
-        out = {}
-        for f in files:
-            ids = papq.read_table(
-                _local_fs_dir(f), columns=["id"]
-            ).column("id").to_pylist()
-            suffix = "/".join(f.rsplit("/", 2)[-2:])
-            out[suffix] = (
-                len(ids),
-                min(ids) if ids else None,
-                max(ids) if ids else None,
-            )
-        return out
-    grouped = (
-        spark.read.option("basePath", path)
-        .parquet(*files)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.min("id").cast("long").alias("min_id"),
-            F.max("id").cast("long").alias("max_id"),
+    """Stat code files by READING their id column — the crash-self-heal
+    fallback only (a writer died between data publish and manifest
+    refresh, or files appeared out-of-band); the normal write path
+    passes precomputed stats and never lands here, so the files are
+    few by construction. Returns {suffix: (n_rows, min_id, max_id)},
+    (0, None, None) for a zero-row file."""
+    st = storage.resolve(spark, path)
+    out = {}
+    for f in files:
+        ids = [r["id"] for r in st.read_rows(f, "id long")]
+        out["/".join(f.rsplit("/", 2)[-2:])] = (
+            len(ids), min(ids, default=None), max(ids, default=None),
         )
-        .collect()
-    )
-    return {
-        "/".join(r["file"].rsplit("/", 2)[-2:]): (
-            int(r["n_rows"]), r["min_id"], r["max_id"],
-        )
-        for r in grouped
-    }
-
-
-def _write_manifest_segment(spark, rows: list, path: str, mode: str) -> None:
-    """Write one manifest segment as a SINGLE file from driver-side
-    rows. LOCAL store: a pyarrow write on the driver (temp file +
-    atomic rename, so a crash never leaves a torn segment; r14 — the
-    rows are metadata-sized, a Spark write job only added fixed
-    latency per refresh). Otherwise deliberately parallelize(rows, 1):
-    coalesce(1) over a default-parallelism local collection stalls on
-    locality scheduling (measured 5.5 s vs 0.3 s for a 16-row segment
-    on local[32]) — one slice is the right plan, not a merge of 32
-    empty ones."""
-    base = _local_fs_dir(f"{path}_manifest")
-    if base is not None:
-        import shutil
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("suffix", pa.string()),
-                ("size", pa.int64()),
-                ("mtime", pa.int64()),
-                ("bucket", pa.int32()),
-                ("n_rows", pa.int64()),
-                ("min_id", pa.int64()),
-                ("max_id", pa.int64()),
-                ("seq", pa.int64()),
-                ("op", pa.string()),
-            ]
-        )
-        cols = (
-            [list(c) for c in zip(*[tuple(r) for r in rows])]
-            if rows
-            else [[] for _ in schema]
-        )
-        table = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-            schema=schema,
-        )
-        if mode == "overwrite" and os.path.isdir(base):
-            shutil.rmtree(base)
-        os.makedirs(base, exist_ok=True)
-        final = os.path.join(base, f"seg-{uuid.uuid4().hex}.parquet")
-        tmp = f"{final}.tmp"
-        papq.write_table(table, tmp)
-        os.rename(tmp, final)
-        return
-    rdd = spark.sparkContext.parallelize([tuple(r) for r in rows], 1)
-    spark.createDataFrame(rdd, _MANIFEST_SEG_SCHEMA).write.mode(
-        mode
-    ).parquet(f"{path}_manifest")
+    return out
 
 
 @coalesce_metadata_stages
@@ -1903,7 +1579,7 @@ def refresh_ivfpq_manifest(
             spark, path, [full for full, _, _, _, _ in need_scan]
         )
         for full, suffix, size, mtime, b in need_scan:
-            n, lo, hi = scanned.get(suffix, (0, None, None))
+            n, lo, hi = scanned[suffix]
             add_rows.append((full, suffix, size, mtime, b, n, lo, hi))
     seq = maxseq + 1
     seg_rows = [r + (seq, "add") for r in add_rows] + [
@@ -1914,7 +1590,9 @@ def refresh_ivfpq_manifest(
         for s in gone
     ]
     mode = "overwrite" if (reset or not have_sidecar) else "append"
-    _write_manifest_segment(spark, seg_rows, path, mode)
+    storage.resolve(spark, path).write_rows_atomic(
+        f"{path}_manifest", seg_rows, _MANIFEST_SEG_SCHEMA, mode
+    )
     if mode == "append":
         # fold piled-up segments HERE, on the writer's own refresh —
         # an append-only/streaming workload that is never compacted
@@ -1939,43 +1617,21 @@ def compact_ivfpq_manifest(
     an append-only/streaming workload that never compacts the INDEX
     still gets its sidecar folded; safe standalone under the same
     single-writer contract."""
-    base = _local_fs_dir(f"{path}_manifest")
-    if base is not None:
-        # driver-side fold: count, reconcile and rewrite without a
-        # single Spark job (metadata-sized by construction — r14)
-        if not os.path.isdir(base):
-            return 0
-        n_seg = sum(
-            1
-            for n in os.listdir(base)
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
-        if n_seg <= max_segments:
-            return 0
-        live = _reconcile_manifest_rows(
-            _read_manifest_segment_rows(spark, path) or []
-        )
-        rows = [
-            _manifest_row8(live[s]) + (0, "add") for s in sorted(live)
-        ]
-        _write_manifest_segment(spark, rows, path, "overwrite")
-        return int(n_seg)
-    from pyspark.errors import AnalysisException
-
-    try:
-        n_seg = (
-            spark.read.format("binaryFile")
-            .load(f"{path}_manifest/*.parquet")
-            .count()
-        )
-    except AnalysisException:
-        return 0
+    st = storage.resolve(spark, path)
+    n_seg = sum(
+        1 for _, name, _, _ in st.list_files(f"{path}_manifest")
+        if name.endswith(".parquet")
+    )
     if n_seg <= max_segments:
         return 0
-    man = _read_ivfpq_manifest(spark, path)
-    rows = [tuple(r) + (0, "add") for r in man.collect()]  # metadata
-    _write_manifest_segment(spark, rows, path, "overwrite")
-    return int(n_seg)
+    live = _reconcile_manifest_rows(
+        _read_manifest_segment_rows(spark, path) or []
+    )
+    rows = [_manifest_row8(live[s]) + (0, "add") for s in sorted(live)]
+    st.write_rows_atomic(
+        f"{path}_manifest", rows, _MANIFEST_SEG_SCHEMA, "overwrite"
+    )
+    return n_seg
 
 
 def _pruned_tombstoned_codes(
@@ -2021,22 +1677,13 @@ def _read_tombstones(spark, path: str) -> DataFrame | None:
     """Read the tombstone sidecar (`<path>_tombstones`, schema
     `id long`) if one exists, else None. The returned frame stays a
     Spark read (the pending-delete set is not metadata-sized in
-    general — it feeds distributed joins), but the ABSENT probe is a
-    plain os.path check on a local store (r14: the AnalysisException
-    the reader raises for a missing path is a py4j exception round
-    trip with a serialized JVM stack — measured in the 0.1 s class,
-    and this probe runs per maintenance verb AND per probe query/
-    micro-batch). Non-local paths keep the reader probe (a single
-    namenode/list call either way)."""
-    from pyspark.errors import AnalysisException
-
-    base = _local_fs_dir(f"{path}_tombstones")
-    if base is not None and not os.path.isdir(base):
+    general — it feeds distributed joins); only the presence probe,
+    which runs per maintenance verb AND per probe query/micro-batch,
+    goes through `storage`."""
+    d = f"{path}_tombstones"
+    if not storage.resolve(spark, path).exists(d):
         return None
-    try:
-        return spark.read.schema("id long").parquet(f"{path}_tombstones")
-    except AnalysisException:
-        return None
+    return spark.read.schema("id long").parquet(d)
 
 
 @coalesce_metadata_stages
@@ -2360,7 +2007,7 @@ def query_ivfpq_index(
     )
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
 
-    cents = _read_sidecar_rows(spark, f"{path}_centroids")
+    cents = _read_centroids(spark, path)
     cb = load_codebooks(spark, path)
     m = len(cb)
     sub = len(cb[0][0])
@@ -2462,7 +2109,7 @@ def query_ivfpq_index_batch(
         cosine_similarity,
     )
 
-    cents = _read_sidecar_rows(spark, f"{path}_centroids")
+    cents = _read_centroids(spark, path)
     cb = load_codebooks(spark, path)
     m = len(cb)
     sub = len(cb[0][0])
@@ -2717,10 +2364,7 @@ def query_ivfpq_index_batch_distributed(
             for mm, cb_m in enumerate(cb)
             for c, cw in enumerate(cb_m)
         ]
-        cb_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(cb_rows, 1),
-            "m int, c int, cw array<long>",
-        )
+        cb_df = local_df(spark, cb_rows, _CODEBOOK_SCHEMA)
         sub_dot = F.aggregate(
             F.zip_with(
                 F.slice(

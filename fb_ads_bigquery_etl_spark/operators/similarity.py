@@ -341,8 +341,7 @@ def build_ivf_index(
     assigned.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(path)
-    # nlist-sized sidecar: driver-side pyarrow write on a local store
-    # (no job), Spark write elsewhere (shared fast path, r14)
+    # nlist-sized sidecar, written through `storage`
     from fb_ads_bigquery_etl_spark.operators.pq import (
         _write_centroid_sidecar,
     )

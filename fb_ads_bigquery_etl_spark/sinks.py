@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.schema import (
     DEDUP_KEY,
     PARTITION_COLUMN,
@@ -19,47 +20,27 @@ from fb_ads_bigquery_etl_spark.schema import (
 )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path, jvm) for `path` via the session's Hadoop conf —
-    the store-agnostic way to list/glob (local, HDFS, s3a, gs all work)."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, jpath, jvm
-
-
 def list_partition_values(
     spark: SparkSession, table_path: str, *, partition_col: str = PARTITION_COLUMN
 ) -> list[str]:
-    """Hive-partition discovery through the Hadoop FileSystem API.
-
-    Replaces local-FS `os.listdir`: at 100 TB the table lives on an
-    object store, and partition discovery must go through the session's
-    filesystem abstraction, not the driver's local disk.
-    """
-    fs, jpath, _ = _hadoop_fs(spark, table_path)
+    """Hive-partition discovery through `storage`, not the driver's
+    local disk: at 100 TB the table lives on an object store."""
     prefix = f"{partition_col}="
-    vals = [
-        st.getPath().getName()[len(prefix):]
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and st.getPath().getName().startswith(prefix)
-    ]
-    return sorted(vals)
+    pattern = f"{table_path.rstrip('/')}/{prefix}*"
+    return sorted(
+        p.rsplit("/", 1)[-1][len(prefix):]
+        for p in storage.resolve(spark, table_path).glob(pattern)
+    )
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
-    """Store-agnostic existence check via the Hadoop FileSystem API."""
-    fs, jpath, _ = _hadoop_fs(spark, path)
-    return fs.exists(jpath)
+    """Store-agnostic existence check."""
+    return storage.resolve(spark, path).exists(path)
 
 
 def glob_files(spark: SparkSession, pattern: str) -> list[str]:
-    """Store-agnostic glob (Hadoop `globStatus`), full URIs, sorted."""
-    fs, _, jvm = _hadoop_fs(spark, pattern)
-    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern))
-    if statuses is None:
-        return []
-    return sorted(st.getPath().toString() for st in statuses)
+    """Store-agnostic glob, full paths, sorted."""
+    return storage.resolve(spark, pattern).glob(pattern)
 
 
 def write_partitioned(
@@ -348,14 +329,7 @@ def compact_partition(
         snap.coalesce(n_files), path, partition_col=partition_col
     )
     part_dir = path.rstrip("/") + f"/{partition_col}={partition_value}"
-    fs, jpath, _ = _hadoop_fs(spark, part_dir)
-    return len(
-        [
-            st
-            for st in fs.listStatus(jpath)
-            if st.getPath().getName().endswith(".parquet")
-        ]
-    )
+    return len(storage.resolve(spark, part_dir).glob(f"{part_dir}/*.parquet"))
 
 
 def write_jsonl(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:

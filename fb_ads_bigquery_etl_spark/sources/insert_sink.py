@@ -16,8 +16,11 @@ it natively:
 
 The default client is filesystem-backed (one JSONL shard per task,
 atomic rename on commit) — a stand-in with the same interface a real
-HTTP client would implement. The DataSink API is the write-side
-sibling of fb_source's DataSourceReader/SimpleDataSourceStreamReader:
+HTTP client would implement. Its shards are written by executor tasks
+with plain `os` calls, so it stays local-only; `storage` (driver-side
+I/O of the engine's own files) does not cover it. The DataSink API is
+the write-side sibling of fb_source's
+DataSourceReader/SimpleDataSourceStreamReader:
 together they close the loop on a fully custom Python-DataSource
 pipeline (API read → transform → API write).
 """

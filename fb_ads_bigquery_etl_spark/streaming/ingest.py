@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.operators.dedup import dedup_any
 from fb_ads_bigquery_etl_spark.schema import DEDUP_KEY
 from fb_ads_bigquery_etl_spark.sinks import merge_upsert
@@ -90,8 +91,8 @@ def stream_ivf_ingest(
     deterministic b<id>-<bucket>-<seq> name; (5) the marker commits
     last. A crash anywhere replays into steps that are all idempotent,
     so the drained index is file-for-file the index every successful
-    history produces. (os.rename is atomic on a real filesystem; an
-    object store needs its committer here, same caveat as every
+    history produces. (A file rename is atomic on a local FS and HDFS;
+    an object store needs its committer here, same caveat as every
     rename-based Spark sink.) The ledger is keyed by the CHECKPOINT'S
     batch ids — discard them together (a fresh checkpoint restarts at
     batch 0; since names are deterministic a full re-drain then simply
@@ -224,8 +225,6 @@ def _drain_bucket_stream(
     mapping each micro-batch to a bucket-partitioned frame (O(batch)
     work against frozen metadata sidecars), and the stage-and-rename
     exactly-once publish per batch. Returns micro-batches processed."""
-    import os
-
     schema = spark.read.parquet(landing_path).schema  # driver-side peek
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -236,13 +235,13 @@ def _drain_bucket_stream(
 
     ledger = f"{index_path}_ingested"
     staging = f"{index_path}_staging"
-    os.makedirs(ledger, exist_ok=True)
+    st = storage.resolve(spark, index_path)
     batches = {"n": 0}
 
     def _sink(batch_df, batch_id: int) -> None:
         batches["n"] += 1
-        marker = os.path.join(ledger, f"batch-{batch_id}")
-        if os.path.exists(marker):  # replay after a successful commit
+        marker = f"{ledger}/batch-{batch_id}"
+        if st.exists(marker):  # replay after a successful commit
             return
         pre = _publish_bucket_batch(
             transform(batch_df), index_path, staging, batch_id
@@ -258,8 +257,7 @@ def _drain_bucket_stream(
         )
 
         refresh_ivfpq_manifest(spark, index_path, precomputed=pre)
-        with open(marker, "w") as fh:
-            fh.write("committed")
+        st.write_text(marker, "committed")
 
     q = (
         stream.writeStream.foreachBatch(_sink)
@@ -281,12 +279,9 @@ def _publish_bucket_batch(
     marker last. Returns the batch's per-bucket (n_rows, min_id,
     max_id) — computed from the frame BEFORE the write so the caller's
     manifest refresh never re-reads the published files."""
-    import os
-    import shutil
-
     from fb_ads_bigquery_etl_spark.operators.pq import _bucket_stats
 
-    stage = os.path.join(staging, f"batch={batch_id}")
+    stage = f"{staging}/batch={batch_id}"
     frame = frame.persist()  # two actions: stats agg + the stage write
     try:
         pre = _bucket_stats(frame)
@@ -297,6 +292,7 @@ def _publish_bucket_batch(
         ).parquet(stage)
     finally:
         frame.unpersist()
+    st = storage.resolve(frame.sparkSession, index_path)
     prefix = f"b{batch_id}-"
     # clean any partial publish of THIS batch id across ALL bucket
     # dirs — not just the buckets this attempt stages into. Within
@@ -305,27 +301,14 @@ def _publish_bucket_batch(
     # partial publish may have landed this id's files in buckets
     # the renumbered batch no longer routes to, and sweeping only
     # staged buckets would leave those as duplicate rows.
-    for bdir in sorted(os.listdir(index_path)):
-        if not bdir.startswith("bucket="):
-            continue
-        dst = os.path.join(index_path, bdir)
-        for old in os.listdir(dst):
-            if old.startswith(prefix):
-                os.remove(os.path.join(dst, old))
-    for bdir in sorted(os.listdir(stage)):
-        if not bdir.startswith("bucket="):
-            continue
-        dst_dir = os.path.join(index_path, bdir)
-        os.makedirs(dst_dir, exist_ok=True)
-        files = sorted(
-            f
-            for f in os.listdir(os.path.join(stage, bdir))
-            if f.endswith(".parquet")
-        )
-        for seq, f in enumerate(files):
-            os.rename(
-                os.path.join(stage, bdir, f),
-                os.path.join(dst_dir, f"{prefix}{seq}.parquet"),
-            )
-    shutil.rmtree(stage, ignore_errors=True)
+    for old in st.glob(f"{index_path}/bucket=*/{prefix}*"):
+        st.delete(old)
+    seq: dict[str, int] = {}
+    for full, suffix, _, _ in st.list_files(stage):
+        bdir = suffix.split("/", 1)[0]
+        if bdir.startswith("bucket=") and suffix.endswith(".parquet"):
+            n = seq.get(bdir, 0)
+            seq[bdir] = n + 1
+            st.rename(full, f"{index_path}/{bdir}/{prefix}{n}.parquet")
+    st.delete(stage)
     return pre

@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -19,6 +20,18 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(params=["local", "hadoop"])
+def store(request):
+    """Run a test once per storage backend. 'hadoop' substitutes the
+    resolver, so every engine file the test touches — on its local tmp
+    dir — goes through Hadoop FileSystem calls and Spark reads/writes,
+    the path every non-local store takes."""
+    with pytest.MonkeyPatch.context() as mp:
+        if request.param == "hadoop":
+            mp.setattr(storage, "resolve", lambda spark, path: storage.Hadoop(spark))
+        yield request.param
 
 
 @pytest.fixture(scope="session")
@@ -132,6 +145,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier (set SPARK_GRAFT_FULL_TESTS=1 to run)"
     )
     for item in items:
-        short = item.nodeid.split("/")[-1]
+        # every parametrized variant of a slow test is slow
+        short = item.nodeid.split("/")[-1].split("[")[0]
         if short in _SLOW_TIER or item.get_closest_marker("slowtier"):
             item.add_marker(skip)

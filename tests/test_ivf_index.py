@@ -523,7 +523,7 @@ def test_ivfpq_index_probe_is_partition_pruned_and_matches_rebuild(
     assert got == again
 
 
-def test_ivfpq_append_is_append_only_and_matches_rebuild(spark, tmp_path):
+def test_ivfpq_append_is_append_only_and_matches_rebuild(spark, tmp_path, store):
     """append_ivfpq_index must (a) never touch existing code files
     (per-bucket pre-append file sets survive as subsets), (b) add
     files only to buckets the batch routes to, and (c) leave the index
@@ -664,7 +664,7 @@ def test_ivfpq_batch_query_equals_per_query_loop(spark, tmp_path):
     assert got2 == want2
 
 
-def test_ivfpq_delete_is_tombstone_only_and_probe_excludes(spark, tmp_path):
+def test_ivfpq_delete_is_tombstone_only_and_probe_excludes(spark, tmp_path, store):
     """delete_from_ivfpq_index must (a) leave every code file
     untouched (tombstone-only), (b) make deleted ids invisible to the
     very next probe, (c) leave the probe row-for-row equal to an index
@@ -1734,7 +1734,7 @@ def test_ivfpq_bucket_split_exact_and_scoped(spark, tmp_path):
     assert a == b
 
 
-def test_ivfpq_manifest_legacy_sidecar_reads_and_upgrades(spark, tmp_path):
+def test_ivfpq_manifest_legacy_sidecar_reads_and_upgrades(spark, tmp_path, store):
     """An index whose sidecar predates the segment format (plain
     8-column snapshot, no seq/op) must read as a seq=0 all-'add'
     segment, and the next refresh must diff against it and APPEND a
@@ -1778,7 +1778,7 @@ def test_ivfpq_manifest_legacy_sidecar_reads_and_upgrades(spark, tmp_path):
     assert sum(r["n_rows"] for r in after) == spark.read.parquet(path).count()
 
 
-def test_ivfpq_manifest_segments_auto_fold_bounds_history(spark, tmp_path):
+def test_ivfpq_manifest_segments_auto_fold_bounds_history(spark, tmp_path, store):
     """An append-only workload that never compacts the INDEX must still
     get its manifest sidecar folded: after many appends the segment
     file count stays bounded by the fold threshold (+1 for the newest
@@ -1818,7 +1818,7 @@ def test_ivfpq_manifest_segments_auto_fold_bounds_history(spark, tmp_path):
     assert sum(r["n_rows"] for r in man) == spark.read.parquet(path).count()
 
 
-def test_ivfpq_split_crash_recovery(spark, tmp_path, monkeypatch):
+def test_ivfpq_split_crash_recovery(spark, tmp_path, monkeypatch, store):
     """A split interrupted AFTER its commit marker lands must (a) gate
     every public verb with a loud 'interrupted bucket split' error —
     the mismatched centroid/code window can never be read — (b) roll

@@ -637,7 +637,7 @@ def test_stream_ivf_ingest_exactly_once_and_probe_equal(spark, tmp_path):
     assert spark.read.parquet(path).count() == emb.count()
 
 
-def test_stream_ivfpq_ingest_exactly_once_and_probe_equal(spark, tmp_path):
+def test_stream_ivfpq_ingest_exactly_once_and_probe_equal(spark, tmp_path, store):
     """stream_ivfpq_ingest must (a) drain the landing zone into the
     persisted PQ index with every pre-existing code file untouched and
     the probe equal to a one-shot rebuild over the union with the SAME
