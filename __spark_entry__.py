@@ -4516,11 +4516,12 @@ def q_ivfpq_batch_query_distributed(spark, sf_dir):
     query_ivfpq_index_batch's documented driver-side query collect
     (fine for serving-sized batches) becomes the bound. Here nothing
     query-sided reaches the driver: probing is a broadcast join
-    against the metadata-sized centroid table, term1 + the full ADC
-    LUT are column expressions unrolled from the codebook sidecar
-    constants (whole-stage codegen, m*ksub literal integer dots), the
-    (qid, bucket, term1, lut) frame joins the partition-pruned code
-    scan bucket-keyed, and the exact rerank stays distributed. The
+    against the metadata-sized centroid table, term1 is a column
+    expression, the ADC LUT is built by crossing the queries with the
+    broadcast codebook sidecar rows and folding the integer dots back
+    into arrays, the (qid, bucket, term1, lut) frame joins the
+    partition-pruned code scan bucket-keyed, and the exact rerank
+    stays distributed. The
     ONLY collect is the distinct probed-bucket list (nlist-bounded
     metadata). Row-for-row equal to the collect-based batch
     (pytest-pinned); the oracle replays the full pipeline per

@@ -249,6 +249,54 @@ def encode_ints(
     )
 
 
+def _long_sum(arr):
+    """Left-to-right int64 sum of an integer array column."""
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, v: acc + v)
+
+
+def _long_dot(a, b):
+    """Exact int64 dot product of two integer array columns."""
+    return _long_sum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def _adc():
+    """ADC score of a row carrying `codes` and its query's `lut`:
+    sum over m of lut[m][codes[m]], a pure int64 sum."""
+    return _long_sum(
+        F.zip_with(
+            F.col("codes"),
+            F.col("lut"),
+            lambda c, row: F.element_at(row, c + F.lit(1)),
+        )
+    )
+
+
+def _int_dot(a, b) -> int:
+    return sum(x * y for x, y in zip(a, b))
+
+
+def _lut(wq: list[int], cb: list[list[list[int]]]) -> list[list[int]]:
+    """Driver-side ADC lookup table of one floor-scaled query:
+    lut[m][c] = exact integer dot of its m-th subvector with codeword
+    c of subspace m."""
+    sub = len(cb[0][0])
+    return [
+        [_int_dot(wq[mm * sub : (mm + 1) * sub], cw) for cw in cb_m]
+        for mm, cb_m in enumerate(cb)
+    ]
+
+
+def _top_k(df: DataFrame, part: str, k: int, *order) -> DataFrame:
+    """The first `k` rows of each `part` group in `order` (a
+    row_number window; ties are the caller's to break in `order`)."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -265,52 +313,85 @@ def pq_adc_topk(
     scan reads only `codes` and scores with M element_at lookups + adds.
     Returns (query_id, neighbor_id, adc_score) with score ordered DESC
     (approximate dot), ties to lowest neighbor_id."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
     qrows = queries.select(
         F.col(id_col).alias("qid"), _floor_ints(F.col(vec_col)).alias("w")
     ).collect()
-    lut_rows = []
-    for r in qrows:
-        w = [int(v) for v in r["w"]]
-        lut = [
-            [
-                sum(
-                    w[mm * sub + d] * cw[d] for d in range(sub)
-                )
-                for cw in codebooks[mm]
-            ]
-            for mm in range(m)
-        ]
-        lut_rows.append((int(r["qid"]), lut))
+    lut_rows = [
+        (int(r["qid"]), _lut([int(v) for v in r["w"]], codebooks))
+        for r in qrows
+    ]
     spark = corpus.sparkSession
     luts = local_df(
         spark, lut_rows, "qid long, lut array<array<long>>"
     )
     codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    score = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     scored = codes.join(
         F.broadcast(luts), F.col("id") != F.col("qid")
     ).select(
         F.col("qid").alias("query_id"),
         F.col("id").alias("neighbor_id"),
-        score.alias("adc_score"),
+        _adc().alias("adc_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
+    return _top_k(
+        scored, "query_id", k,
+        F.col("adc_score").desc(), F.col("neighbor_id").asc(),
+    )
+
+
+def _recall_at_k(
+    df: DataFrame,
+    queries: DataFrame,
+    cand: DataFrame,
+    *,
+    k: int,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The recall tally of the audit harnesses: exact float rerank of
+    the (query_id, neighbor_id) candidates down to the top k, scored
+    against the exact float top-k. One row per query: (query_id,
+    n_exact, n_overlap)."""
+    from fb_ads_bigquery_etl_spark.functions.portable import (
+        cosine_similarity,
+    )
+    from fb_ads_bigquery_etl_spark.operators.similarity import knn_join
+
+    exact = knn_join(df, queries, k=k, vec_col=vec_col, id_col=id_col)
+    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    cvecs = df.select(F.col(id_col).alias("neighbor_id"), vec_d.alias("_cv"))
+    qvecs = queries.select(F.col(id_col).alias("query_id"), vec_d.alias("_qv"))
+    reranked = (
+        cvecs.join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(qvecs), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_similarity(F.col("_cv"), F.col("_qv")).alias("rscore"),
+        )
+    )
+    picked = _top_k(
+        reranked, "query_id", k,
+        F.col("rscore").desc(), F.col("neighbor_id").asc(),
+    ).select("query_id", "neighbor_id")
+    hits = exact.join(
+        F.broadcast(picked), ["query_id", "neighbor_id"]
+    )
+    per_exact = exact.groupBy("query_id").agg(
+        F.count("*").cast("long").alias("n_exact")
+    )
+    per_hit = hits.groupBy("query_id").agg(
+        F.count("*").cast("long").alias("n_overlap")
     )
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+        per_exact.join(F.broadcast(per_hit), "query_id", "left")
+        .select(
+            "query_id",
+            "n_exact",
+            F.coalesce(F.col("n_overlap"), F.lit(0))
+            .cast("long")
+            .alias("n_overlap"),
+        )
+        .orderBy("query_id")
     )
 
 
@@ -331,58 +412,15 @@ def pq_recall(
     only those — vs the exact float top-k (the jl_recall audit harness
     with PQ as the candidate stage). One row per query:
     (query_id, n_exact, n_overlap)."""
-    from fb_ads_bigquery_etl_spark.functions.portable import (
-        cosine_similarity,
-    )
-    from fb_ads_bigquery_etl_spark.operators.similarity import knn_join
-
     queries = df.filter(F.col(id_col) < n_queries)
-    exact = knn_join(df, queries, k=k, vec_col=vec_col, id_col=id_col)
     cb = pq_train_codebooks(
         df, in_dim=in_dim, m=m, ksub=ksub, vec_col=vec_col, id_col=id_col
     )
     cand = pq_adc_topk(
         df, queries, cb, k=k * expand, vec_col=vec_col, id_col=id_col
     ).select("query_id", "neighbor_id")
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cvecs = df.select(F.col(id_col).alias("neighbor_id"), vec_d.alias("_cv"))
-    qvecs = queries.select(F.col(id_col).alias("query_id"), vec_d.alias("_qv"))
-    reranked = (
-        cvecs.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity(F.col("_cv"), F.col("_qv")).alias("rscore"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rscore").desc(), F.col("neighbor_id").asc()
-    )
-    picked = (
-        reranked.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    hits = exact.join(
-        F.broadcast(picked), ["query_id", "neighbor_id"]
-    )
-    per_exact = exact.groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_exact")
-    )
-    per_hit = hits.groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return (
-        per_exact.join(F.broadcast(per_hit), "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce(F.col("n_overlap"), F.lit(0))
-            .cast("long")
-            .alias("n_overlap"),
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        df, queries, cand, k=k, vec_col=vec_col, id_col=id_col
     )
 
 
@@ -420,44 +458,20 @@ def ivfpq_recall(
     accumulation — identical in Spark expressions and DuckDB
     list_reduce); residuals, the one-Lloyd-step training, codes,
     term1, and every ADC score are pure int64 — the oracle replays
-    the whole pipeline, training included."""
+    the whole pipeline, training included. The probe recomputes both
+    norms (cosine_similarity), unlike the index probes' stored cnorm;
+    the oracle replays exactly this form."""
     from fb_ads_bigquery_etl_spark.functions.portable import (
         cosine_similarity,
     )
-    from fb_ads_bigquery_etl_spark.operators.similarity import (
-        assign_ivf_buckets,
-        knn_join,
-    )
 
     queries = df.filter(F.col(id_col) < n_queries)
-    exact = knn_join(df, queries, k=k, vec_col=vec_col, id_col=id_col)
-
-    cents, assigned = assign_ivf_buckets(
+    cents, resid = _residuals(
         df,
+        centroids,
+        centroid_mod=centroid_mod,
         vec_col=vec_col,
         id_col=id_col,
-        centroid_mod=centroid_mod,
-        centroids=centroids,
-    )
-    to_ints = lambda col: F.transform(  # noqa: E731
-        col, lambda x: F.floor(x * PQ_SCALE).cast("long")
-    )
-    centint = cents.select(
-        "centroid_id", to_ints(F.col("cvec")).alias("_wc")
-    )
-    resid = (
-        assigned.select("id", "bucket", to_ints(F.col("vec")).alias("_w"))
-        .join(
-            F.broadcast(centint),
-            F.col("bucket") == F.col("centroid_id"),
-        )
-        .select(
-            "id",
-            "bucket",
-            F.zip_with(
-                F.col("_w"), F.col("_wc"), lambda a, b: a - b
-            ).alias("_r"),
-        )
     )
     cb = train_codebooks_ints(
         resid, dim=in_dim, m=m, ksub=ksub, int_col="_r", id_col="id"
@@ -468,66 +482,39 @@ def ivfpq_recall(
 
     # metadata-sized driver work: query ints, centroid ints, probed
     # lists, and the per-(query, bucket) LUT + dot(q, c) correction
-    sub = in_dim // m
     qints = {
         int(r["qid"]): [int(v) for v in r["w"]]
         for r in queries.select(
             F.col(id_col).alias("qid"),
-            to_ints(
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            ).alias("w"),
+            _floor_ints(F.col(vec_col)).alias("w"),
         ).collect()
     }
     wcs = {
         int(r["centroid_id"]): [int(v) for v in r["_wc"]]
-        for r in centint.collect()
+        for r in cents.select(
+            "centroid_id", _floor_ints(F.col("cvec")).alias("_wc")
+        ).collect()
     }
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     qvecs = queries.select(F.col(id_col).alias("qid"), vec_d.alias("_qv"))
-    probed = (
-        qvecs.crossJoin(F.broadcast(cents))
-        .select(
+    probed = _top_k(
+        qvecs.crossJoin(F.broadcast(cents)).select(
             "qid",
             "centroid_id",
             cosine_similarity(F.col("_qv"), F.col("cvec")).alias("_cs"),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    F.col("_cs").desc(), F.col("centroid_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("_rn") <= nprobe)
-        .select("qid", "centroid_id")
-        .collect()
-    )
+        ),
+        "qid", nprobe,
+        F.col("_cs").desc(), F.col("centroid_id").asc(),
+    ).collect()
     lut_rows = []
     for r in probed:
         qid, b = int(r["qid"]), int(r["centroid_id"])
-        wq, wc = qints[qid], wcs[b]
-        term1 = sum(a * c for a, c in zip(wq, wc))
-        lut = [
-            [
-                sum(wq[mm * sub + d] * cw[d] for d in range(sub))
-                for cw in cb[mm]
-            ]
-            for mm in range(m)
-        ]
-        lut_rows.append((qid, b, term1, lut))
-    spark = df.sparkSession
+        wq = qints[qid]
+        lut_rows.append((qid, b, _int_dot(wq, wcs[b]), _lut(wq, cb)))
     luts = local_df(
-        spark, lut_rows, "qid long, b long, term1 long, lut array<array<long>>"
-    )
-    adc = F.col("term1") + F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+        df.sparkSession,
+        lut_rows,
+        "qid long, b long, term1 long, lut array<array<long>>",
     )
     scored = codes.join(
         F.broadcast(luts),
@@ -535,82 +522,48 @@ def ivfpq_recall(
     ).select(
         F.col("qid").alias("query_id"),
         F.col("id").alias("neighbor_id"),
-        adc.alias("adc_score"),
+        (F.col("term1") + _adc()).alias("adc_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k * expand)
-        .select("query_id", "neighbor_id")
-    )
-    cvecs = df.select(F.col(id_col).alias("neighbor_id"), vec_d.alias("_cv"))
-    reranked = (
-        cvecs.join(F.broadcast(cand), "neighbor_id")
-        .join(
-            F.broadcast(qvecs.withColumnRenamed("qid", "query_id")),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity(F.col("_cv"), F.col("_qv")).alias("rscore"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("rscore").desc(), F.col("neighbor_id").asc()
-    )
-    picked = (
-        reranked.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    hits = exact.join(F.broadcast(picked), ["query_id", "neighbor_id"])
-    per_exact = exact.groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_exact")
-    )
-    per_hit = hits.groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return (
-        per_exact.join(F.broadcast(per_hit), "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce(F.col("n_overlap"), F.lit(0))
-            .cast("long")
-            .alias("n_overlap"),
-        )
-        .orderBy("query_id")
+    cand = _top_k(
+        scored, "query_id", k * expand,
+        F.col("adc_score").desc(), F.col("neighbor_id").asc(),
+    ).select("query_id", "neighbor_id")
+    return _recall_at_k(
+        df, queries, cand, k=k, vec_col=vec_col, id_col=id_col
     )
 
 
 def _residuals(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | None,
     *,
+    centroid_mod: int = 50,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
     """(centroid frame, residual frame (id, bucket, _r)): assign each
     vector to its nearest coarse centroid and subtract the centroid's
     floor-scaled int form — the shared narrow pass of index build,
-    O(batch) append, and streaming ingest. One broadcast join against
-    the metadata-sized centroid table; zero data-sized shuffle."""
+    O(batch) append, streaming ingest and the recall audit. One
+    broadcast join against the metadata-sized centroid table; zero
+    data-sized shuffle. With no `centroids`, assignment samples every
+    `centroid_mod`-th id (assign_ivf_buckets)."""
     from fb_ads_bigquery_etl_spark.operators.similarity import (
         assign_ivf_buckets,
     )
 
-    to_ints = lambda col: F.transform(  # noqa: E731
-        col, lambda x: F.floor(x * PQ_SCALE).cast("long")
-    )
     cents, assigned = assign_ivf_buckets(
-        df, vec_col=vec_col, id_col=id_col, centroids=centroids
+        df,
+        vec_col=vec_col,
+        id_col=id_col,
+        centroid_mod=centroid_mod,
+        centroids=centroids,
     )
-    centint = cents.select("centroid_id", to_ints(F.col("cvec")).alias("_wc"))
+    centint = cents.select(
+        "centroid_id", _floor_ints(F.col("cvec")).alias("_wc")
+    )
     resid = (
-        assigned.select("id", "bucket", to_ints(F.col("vec")).alias("_w"))
+        assigned.select("id", "bucket", _floor_ints(F.col("vec")).alias("_w"))
         .join(F.broadcast(centint), F.col("bucket") == F.col("centroid_id"))
         .select(
             "id",
@@ -1983,6 +1936,20 @@ def ivfpq_index_stats(
     )
 
 
+def _probe_codes(spark, path: str, buckets: list[int]) -> DataFrame:
+    """The probes' code scan: refuse an index with a split in flight,
+    partition-prune to the probed `buckets`, and anti-join the
+    tombstone sidecar BEFORE candidate selection, so a logical delete
+    is visible to the next query (plain join — the pending-delete set
+    is not metadata-sized in general)."""
+    _check_no_split_inflight(spark, path)
+    codes = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
+    tomb = _read_tombstones(spark, path)
+    if tomb is not None:
+        codes = codes.join(tomb, "id", "left_anti")
+    return codes
+
+
 def query_ivfpq_index(
     spark,
     path: str,
@@ -1995,82 +1962,20 @@ def query_ivfpq_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Probe a persisted IVF-PQ index: nprobe nearest centroids picked
-    driver-side over the tiny centroid table, a PARTITION-PRUNED scan
-    of only those buckets' code files, ADC scoring against a broadcast
-    per-bucket integer LUT (term1 = dot(q, c_bucket) + m table lookups
-    per candidate — no vector math touches the corpus), top k*expand
-    candidates, then the exact float rerank fetches ONLY those ids'
-    full vectors from `rerank_src`. Returns (id_col, score) top-k."""
-    from fb_ads_bigquery_etl_spark.functions.portable import (
-        cosine_similarity,
-    )
-    from pyspark.sql import Window  # noqa: F401  (parity with siblings)
-
-    cents = _read_centroids(spark, path)
-    cb = load_codebooks(spark, path)
-    m = len(cb)
-    sub = len(cb[0][0])
-
-    import math
-
-    wq = [math.floor(float(x) * PQ_SCALE) for x in query_vec]
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-
-    def cos(row):
-        dot = sum(float(a) * float(b) for a, b in zip(row["cvec"], query_vec))
-        return dot / (row["cnorm"] * qnorm)
-
-    probed = sorted(cents, key=lambda r: (-cos(r), r["centroid_id"]))[:nprobe]
-    lut_rows = []
-    for r in probed:
-        wc = [math.floor(float(x) * PQ_SCALE) for x in r["cvec"]]
-        term1 = sum(a * c for a, c in zip(wq, wc))
-        lut = [
-            [sum(wq[mm * sub + d] * cw[d] for d in range(sub)) for cw in cb[mm]]
-            for mm in range(m)
-        ]
-        lut_rows.append((int(r["centroid_id"]), term1, lut))
-    luts = local_df(
-        spark, lut_rows, "b long, term1 long, lut array<array<long>>"
-    )
-    _check_no_split_inflight(spark, path)
-    codes = spark.read.parquet(path).filter(
-        F.col("bucket").isin([b for b, _, _ in lut_rows])
-    )
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        # logical deletes are visible immediately: anti-join the
-        # tombstone sidecar BEFORE candidate selection (plain join —
-        # the pending-delete set is not metadata-sized in general)
-        codes = codes.join(tomb, "id", "left_anti")
-    adc = F.col("term1") + F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    cand = (
-        codes.join(F.broadcast(luts), F.col("bucket") == F.col("b"))
-        .select(F.col("id"), adc.alias("adc_score"))
-        .orderBy(F.col("adc_score").desc(), F.col("id").asc())
-        .limit(k * expand)
-        .select("id")
-    )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    reranked = (
-        rerank_src.select(F.col(id_col).alias("id"), vec_d.alias("_cv"))
-        .join(F.broadcast(cand), "id")
-        .select(
-            F.col("id").alias(id_col),
-            cosine_similarity(F.col("_cv"), q).alias("score"),
-        )
-    )
-    return reranked.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    """Probe a persisted IVF-PQ index with ONE query: the batch probe
+    (query_ivfpq_index_batch) over a one-query batch. Returns
+    (id_col, score) top-k, ties to the lowest id."""
+    return _probe_batch(
+        spark,
+        path,
+        [(0, [float(x) for x in query_vec])],
+        k=k,
+        nprobe=nprobe,
+        expand=expand,
+        rerank_src=rerank_src,
+        vec_col=vec_col,
+        id_col=id_col,
+    ).drop("query_id")
 
 
 def query_ivfpq_index_batch(
@@ -2086,23 +1991,58 @@ def query_ivfpq_index_batch(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index with a BATCH of queries — the
-    serving shape (query_ivfpq_index amortized): per-query LUTs are
-    built from the metadata-sized query collect and BROADCAST as ONE
-    (qid, bucket, term1, lut) frame, the code scan partition-prunes to
-    the UNION of all queries' probed buckets and is read ONCE (each
-    probed bucket's files scan a single time however many queries
-    probe it, vs once per query in a probe loop), ADC scores every
-    (query, candidate) pair riding that one scan, a per-query window
-    keeps the top k*expand, and the exact float rerank fetches only
-    the candidate ids from `rerank_src`. Returns (query_id, id_col,
-    score), top-k per query, ties to the lowest id — row-for-row equal
-    to a query_ivfpq_index loop (pytest-pinned; the oracle replays the
-    whole pipeline per query).
+    serving shape: nprobe nearest centroids per query picked
+    driver-side over the tiny centroid table, per-query LUTs built
+    from the metadata-sized query collect and BROADCAST as ONE
+    (qid, bucket, term1, lut) frame (term1 = dot(q, c_bucket); ADC =
+    term1 + m table lookups per candidate — no vector math touches the
+    corpus), the code scan partition-pruned to the UNION of all
+    queries' probed buckets and read ONCE (each probed bucket's files
+    scan a single time however many queries probe it), a per-query
+    window keeping the top k*expand, and the exact float rerank
+    fetching only the candidate ids' full vectors from `rerank_src`.
+    Returns (query_id, id_col, score), top-k per query, ties to the
+    lowest id (the oracle replays the whole pipeline per query).
 
     At 100 TB this is the difference between an index that answers ONE
     query and one that serves a workload: LUT math is per-query
     metadata work, the corpus-sided cost is one pruned scan per BATCH.
     """
+    qrows = [
+        (int(r["qid"]), [float(x) for x in r["qv"]])
+        for r in queries.select(
+            F.col(id_col).alias("qid"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
+                "qv"
+            ),
+        ).collect()
+    ]
+    return _probe_batch(
+        spark,
+        path,
+        qrows,
+        k=k,
+        nprobe=nprobe,
+        expand=expand,
+        rerank_src=rerank_src,
+        vec_col=vec_col,
+        id_col=id_col,
+    )
+
+
+def _probe_batch(
+    spark,
+    path: str,
+    qrows: list[tuple[int, list[float]]],
+    *,
+    k: int,
+    nprobe: int,
+    expand: int,
+    rerank_src: DataFrame,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """query_ivfpq_index_batch over driver-side (qid, vector) rows."""
     import math
 
     from fb_ads_bigquery_etl_spark.functions.portable import (
@@ -2111,16 +2051,8 @@ def query_ivfpq_index_batch(
 
     cents = _read_centroids(spark, path)
     cb = load_codebooks(spark, path)
-    m = len(cb)
-    sub = len(cb[0][0])
-
-    qrows = queries.select(
-        F.col(id_col).alias("qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    ).collect()
     lut_rows = []
-    for qr in qrows:
-        qv = [float(x) for x in qr["qv"]]
+    for qid, qv in qrows:
         wq = [math.floor(x * PQ_SCALE) for x in qv]
         qnorm = math.sqrt(sum(x * x for x in qv))
 
@@ -2131,59 +2063,27 @@ def query_ivfpq_index_batch(
         probed = sorted(cents, key=lambda r: (-cos(r), r["centroid_id"]))[
             :nprobe
         ]
-        lut = [
-            [
-                sum(wq[mm * sub + d] * cw[d] for d in range(sub))
-                for cw in cb[mm]
-            ]
-            for mm in range(m)
-        ]
+        lut = _lut(wq, cb)
         for r in probed:
             wc = [math.floor(float(x) * PQ_SCALE) for x in r["cvec"]]
-            term1 = sum(a * c for a, c in zip(wq, wc))
-            lut_rows.append(
-                (int(qr["qid"]), int(r["centroid_id"]), term1, lut)
-            )
+            lut_rows.append((qid, int(r["centroid_id"]), _int_dot(wq, wc), lut))
     luts = local_df(
         spark, lut_rows, "qid long, b long, term1 long, lut array<array<long>>"
     )
-    buckets = sorted({b for _, b, _, _ in lut_rows})
-    _check_no_split_inflight(spark, path)
-    codes = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        # same immediate-visibility discipline as the single probe
-        codes = codes.join(tomb, "id", "left_anti")
-    adc = F.col("term1") + F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    codes = _probe_codes(spark, path, sorted({b for _, b, _, _ in lut_rows}))
     scored = codes.join(
         F.broadcast(luts), F.col("bucket") == F.col("b")
     ).select(
         F.col("qid").alias("query_id"),
         F.col("id"),
-        adc.alias("adc_score"),
+        (F.col("term1") + _adc()).alias("adc_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("id").asc()
-    )
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k * expand)
-        .select("query_id", "id")
-    )
+    cand = _top_k(
+        scored, "query_id", k * expand,
+        F.col("adc_score").desc(), F.col("id").asc(),
+    ).select("query_id", "id")
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qvecs = local_df(
-        spark,
-        [(int(r["qid"]), [float(x) for x in r["qv"]]) for r in qrows],
-        "query_id long, _qv array<double>",
-    )
+    qvecs = local_df(spark, qrows, "query_id long, _qv array<double>")
     reranked = (
         rerank_src.select(F.col(id_col).alias("id"), vec_d.alias("_cv"))
         .join(F.broadcast(cand), "id")
@@ -2194,18 +2094,14 @@ def query_ivfpq_index_batch(
             cosine_similarity(F.col("_cv"), F.col("_qv")).alias("score"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        reranked.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.col("score").desc(), F.col(id_col).asc())
-    )
+    return _top_k(
+        reranked, "query_id", k, F.col("score").desc(), F.col(id_col).asc()
+    ).orderBy("query_id", F.col("score").desc(), F.col(id_col).asc())
 
 
-_LUT_UNROLL_MAX_LITERALS = 4096
+# the distributed probe's scoring join spreads each bucket over this
+# many tasks (see query_ivfpq_index_batch_distributed)
+_SCORE_SALT = 8
 
 
 def query_ivfpq_index_batch_distributed(
@@ -2219,8 +2115,6 @@ def query_ivfpq_index_batch_distributed(
     rerank_src: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    salt: int = 8,
-    lut_strategy: str = "auto",
 ) -> DataFrame:
     """`query_ivfpq_index_batch` with the QUERIES kept distributed —
     the index-join shape: when the 'batch' is itself a table (join
@@ -2229,17 +2123,17 @@ def query_ivfpq_index_batch_distributed(
     fine for serving-sized batches) becomes the bottleneck. Here
     NOTHING query-sided ever reaches the driver: probing is a
     broadcast join of the query frame against the metadata-sized
-    centroid table (per-query top-nprobe window), term1 and the full
-    ADC LUT are computed AS COLUMN EXPRESSIONS — the codebooks are
-    metadata-sized sidecar constants, so lut[m][c] unrolls to m*ksub
-    integer dot products against literal codeword arrays inside
-    whole-stage codegen — and the (qid, bucket, term1, lut) frame
-    joins the code scan bucket-keyed (plain join: a query TABLE is
-    not broadcastable by assumption; AQE still broadcasts small
-    batches). The only driver materialization is the DISTINCT probed
-    bucket list (bounded by nlist — metadata, not queries), which
-    keeps the code scan partition-pruned. Same tombstone anti-join;
-    candidate selection is a TWO-PHASE hash-agg top-(k*expand)
+    centroid table (per-query top-nprobe window), term1 is a column
+    expression, and the ADC LUT is built data-sided by crossing the
+    query frame with a broadcast (m, c, cw) codebook frame and folding
+    the per-(m, c) dots back into array<array<long>> (generated code
+    stays flat at every PQ shape). The (qid, bucket, term1, lut) frame
+    joins the code scan bucket-keyed (plain join: a query TABLE is not
+    broadcastable by assumption; AQE still broadcasts small batches).
+    The only driver materialization is the DISTINCT probed bucket list
+    (bounded by nlist — metadata, not queries), which keeps the code
+    scan partition-pruned. Same tombstone anti-join; candidate
+    selection is a TWO-PHASE hash-agg top-(k*expand)
     (topk_per_group_structs — no window over query_id, so one giant
     query cannot serialize a task over ~nprobe/nlist of the corpus);
     the final exact rerank window ranks at most k*expand survivors
@@ -2247,188 +2141,107 @@ def query_ivfpq_index_batch_distributed(
     (pytest-pinned; the oracle replays the full pipeline per query).
 
     Probe scoring uses the STORED cnorm column (dot / (cnorm *
-    l2(q))), the same float expression the collect-based paths
-    evaluate, so a near-tie in centroid similarity cannot make the
-    three probe implementations pick different buckets.
+    l2(q))), the same float expression the collect-based probe
+    evaluates, so a near-tie in centroid similarity cannot make the
+    two probe implementations pick different buckets.
 
     The scoring join is SALTED: `bucket` alone has only nlist
     effective keys, so one hot bucket would serialize a task at
-    scale. The LUT side explodes by a small `salt` factor and the
-    join co-keys on (bucket, pmod(hash(id), salt)) — each code row
-    still meets each (qid, bucket) LUT exactly once, but a hot
-    bucket spreads over `salt` tasks (plan-pinned in tests). salt=1
-    disables.
-
-    `lut_strategy`: 'unrolled' builds lut[m][c] as m*ksub literal
-    codeword dot products inside whole-stage codegen — optimal at
-    gate-scale PQ shapes, but the generated code grows with
-    m*ksub*sub and would blow Janino/constant-pool limits at
-    realistic sizes (ksub=256). 'join' builds the same LUT by
-    crossing the query frame with a broadcast (m, c, cw) codebook
-    frame and folding rows back into the array — two query-sided
-    shuffles, no codegen growth. 'auto' picks 'unrolled' iff
-    m*ksub*sub <= _LUT_UNROLL_MAX_LITERALS (the two strategies are
-    row-identical, pytest-pinned)."""
+    scale. The LUT side explodes by `_SCORE_SALT` and the join co-keys
+    on (bucket, pmod(hash(id), _SCORE_SALT)) — each code row still
+    meets each (qid, bucket) LUT exactly once, but a hot bucket
+    spreads over that many tasks (plan-pinned in tests)."""
     from fb_ads_bigquery_etl_spark.functions.portable import (
         cosine_similarity,
+        dot_product,
+    )
+    from fb_ads_bigquery_etl_spark.operators.sampling import (
+        topk_per_group_structs,
     )
 
-    cents = spark.read.parquet(f"{path}_centroids")
+    cents = local_df(spark, _read_centroids(spark, path), _CENTROID_SCHEMA)
     cb = load_codebooks(spark, path)
-    m = len(cb)
     sub = len(cb[0][0])
-    to_ints = lambda col: F.transform(  # noqa: E731
-        col, lambda x: F.floor(x * PQ_SCALE).cast("long")
-    )
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def lit_dot(slice_col, cw):
-        arr = F.array(*[F.lit(int(x)).cast("long") for x in cw])
-        return F.aggregate(
-            F.zip_with(slice_col, arr, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    lut_col = F.array(
-        *[
-            F.array(
-                *[
-                    lit_dot(
-                        F.slice(F.col("_wq"), mm * sub + 1, sub), cb[mm][c]
-                    )
-                    for c in range(len(cb[mm]))
-                ]
-            )
-            for mm in range(m)
-        ]
-    )
     # materialize ONCE (executor-side blocks, never the driver): qv
-    # feeds the probe, the scoring join, AND the rerank, and luts is
-    # both collected from (the bucket list) and joined against — a
-    # lazy plan would re-evaluate the query subtree per consumer, and
-    # a non-deterministic or concurrently-appended query table could
-    # then probe one bucket set and score another
+    # feeds the probe, the LUT build, the scoring join, AND the
+    # rerank, and luts is both collected from (the bucket list) and
+    # joined against — a lazy plan would re-evaluate the query subtree
+    # per consumer, and a non-deterministic or concurrently-appended
+    # query table could then probe one bucket set and score another
     qv = queries.select(
         F.col(id_col).alias("qid"),
         vec_d.alias("_qv"),
-        to_ints(vec_d).alias("_wq"),
+        _floor_ints(vec_d).alias("_wq"),
     ).localCheckpoint(eager=True)
-    from fb_ads_bigquery_etl_spark.functions.portable import dot_product
-
     centint = cents.select(
-        "centroid_id", "cvec", "cnorm", to_ints(F.col("cvec")).alias("_wc")
+        "centroid_id", "cvec", "cnorm", _floor_ints(F.col("cvec")).alias("_wc")
     )
     # dot / (cnorm * |q|): the STORED cnorm, mirroring the collect-
-    # based probes' float expression exactly (ADVICE: a recomputed
-    # norm could flip a near-tie and probe a different bucket)
+    # based probe's float expression exactly (a recomputed norm could
+    # flip a near-tie and probe a different bucket)
     probe_score = dot_product(F.col("_qv"), F.col("cvec")) / (
         F.col("cnorm") * F.sqrt(dot_product(F.col("_qv"), F.col("_qv")))
     )
-    probed = (
-        qv.crossJoin(F.broadcast(centint))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(
-                    probe_score.desc(),
-                    F.col("centroid_id").asc(),
-                )
-            ),
+    probed = _top_k(
+        qv.crossJoin(F.broadcast(centint)),
+        "qid", nprobe,
+        probe_score.desc(), F.col("centroid_id").asc(),
+    )
+    cb_rows = [
+        (mm, c, [int(x) for x in cw])
+        for mm, cb_m in enumerate(cb)
+        for c, cw in enumerate(cb_m)
+    ]
+    cb_df = local_df(spark, cb_rows, _CODEBOOK_SCHEMA)
+    sub_dot = _long_dot(
+        F.slice(F.col("_wq"), F.col("m") * F.lit(sub) + F.lit(1), sub),
+        F.col("cw"),
+    )
+    lut_df = (
+        qv.crossJoin(F.broadcast(cb_df))
+        .select("qid", "m", "c", sub_dot.alias("_d"))
+        .groupBy("qid", "m")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("c", "_d"))),
+                lambda s: s["_d"],
+            ).alias("_row")
         )
-        .filter(F.col("_rn") <= nprobe)
+        .groupBy("qid")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("m", "_row"))),
+                lambda s: s["_row"],
+            ).alias("lut")
+        )
     )
-    term1 = F.aggregate(
-        F.zip_with(F.col("_wq"), F.col("_wc"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    n_literals = m * len(cb[0]) * sub
-    use_unrolled = lut_strategy == "unrolled" or (
-        lut_strategy == "auto" and n_literals <= _LUT_UNROLL_MAX_LITERALS
-    )
-    if use_unrolled:
-        luts = probed.select(
+    luts = (
+        probed.select(
             "qid",
             F.col("centroid_id").alias("b"),
-            term1.alias("term1"),
-            lut_col.alias("lut"),
+            _long_dot(F.col("_wq"), F.col("_wc")).alias("term1"),
         )
-    else:
-        # join strategy: same LUT, built data-sided — one crossJoin
-        # against the broadcast (m, c, cw) codebook frame, then two
-        # folds back to array<array<long>>; generated code stays flat
-        # however large m*ksub*sub grows
-        cb_rows = [
-            (mm, c, [int(x) for x in cw])
-            for mm, cb_m in enumerate(cb)
-            for c, cw in enumerate(cb_m)
-        ]
-        cb_df = local_df(spark, cb_rows, _CODEBOOK_SCHEMA)
-        sub_dot = F.aggregate(
-            F.zip_with(
-                F.slice(
-                    F.col("_wq"), F.col("m") * F.lit(sub) + F.lit(1), sub
-                ),
-                F.col("cw"),
-                lambda a, b: a * b,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        lut_df = (
-            qv.crossJoin(F.broadcast(cb_df))
-            .select("qid", "m", "c", sub_dot.alias("_d"))
-            .groupBy("qid", "m")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("c", "_d"))),
-                    lambda s: s["_d"],
-                ).alias("_row")
-            )
-            .groupBy("qid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "_row"))),
-                    lambda s: s["_row"],
-                ).alias("lut")
-            )
-        )
-        luts = probed.select(
-            "qid", F.col("centroid_id").alias("b"), term1.alias("term1")
-        ).join(lut_df, "qid")
-    luts = luts.localCheckpoint(eager=True)
+        .join(lut_df, "qid")
+        .localCheckpoint(eager=True)
+    )
     # the one driver-sided list: DISTINCT probed buckets, bounded by
     # nlist — what keeps the code scan partition-pruned without ever
     # materializing the query table
     buckets = sorted(
         int(r[0]) for r in luts.select("b").distinct().collect()
     )
-    _check_no_split_inflight(spark, path)
-    codes = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        codes = codes.join(tomb, "id", "left_anti")
-    adc = F.col("term1") + F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    # salt the 16-effective-key bucket join so a hot bucket spreads
-    # over `salt` tasks instead of serializing one (each code row
+    codes = _probe_codes(spark, path, buckets)
+    # salt the nlist-effective-key bucket join so a hot bucket spreads
+    # over _SCORE_SALT tasks instead of serializing one (each code row
     # carries ONE salt value; the LUT side replicates across all of
     # them, so every (qid, bucket) pair still scores each code exactly
     # once)
-    n_salt = max(1, int(salt))
     salted_luts = luts.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(_SCORE_SALT)]))
     )
     salted_codes = codes.withColumn(
-        "_salt", F.pmod(F.hash(F.col("id")), F.lit(n_salt)).cast("int")
+        "_salt", F.pmod(F.hash(F.col("id")), F.lit(_SCORE_SALT)).cast("int")
     )
     scored = salted_codes.join(
         salted_luts,
@@ -2438,7 +2251,7 @@ def query_ivfpq_index_batch_distributed(
     ).select(
         F.col("qid").alias("query_id"),
         F.col("id"),
-        adc.alias("adc_score"),
+        (F.col("term1") + _adc()).alias("adc_score"),
     )
     # two-phase hash-agg top-(k*expand), NO window over query_id: a
     # window would funnel EVERY scored candidate of a query (all codes
@@ -2451,10 +2264,6 @@ def query_ivfpq_index_batch_distributed(
     # (adc_score desc, id asc); adc_score is an exact long, so
     # negation is lossless and the two forms are row-identical
     # (pytest-pinned against the collect-based path).
-    from fb_ads_bigquery_etl_spark.operators.sampling import (
-        topk_per_group_structs,
-    )
-
     cand = topk_per_group_structs(
         scored,
         "query_id",
@@ -2474,12 +2283,6 @@ def query_ivfpq_index_batch_distributed(
             cosine_similarity(F.col("_cv"), F.col("_qv")).alias("score"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        reranked.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.col("score").desc(), F.col(id_col).asc())
-    )
+    return _top_k(
+        reranked, "query_id", k, F.col("score").desc(), F.col(id_col).asc()
+    ).orderBy("query_id", F.col("score").desc(), F.col(id_col).asc())

@@ -106,12 +106,15 @@ def get_spark(
     AQE is the core scale lever: runtime partition coalescing keeps
     small-SF tests fast while skew-join splitting protects the 100 TB
     case (skewed campaign/ad dedup keys, SURVEY.md §4).
+
+    Deployment sizing comes from the environment (`SPARK_GRAFT_CPUS`,
+    default 32, sets the master and the default shuffle partitions;
+    `SPARK_GRAFT_DRIVER_MEM`, default 8g); any other setting is
+    overridden through `extra_conf`.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
+    shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -123,16 +126,9 @@ def get_spark(
         # session-wide serializes CPU-heavy byte-light reduce stages
         # (pair-verification joins went x1.8-2.9) while only the
         # metadata-bounded stages win. Those get the scoped
-        # `coalesce_by_bytes` context below instead; both knobs stay
-        # env-parameterised for cluster tuning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_SIZE", "64m"),
-        )
+        # `coalesce_by_bytes` context below instead.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -148,12 +144,8 @@ def get_spark(
         # tombstone batch silently hides live rows from every probe;
         # an orphan append file is adopted by the manifest's fallback
         # scan, so a retry duplicates rows). v2 was also never measured
-        # to win (r14 A/B: see OPTIMIZATION_r14.md). Env-tunable for
-        # deployments whose writers all stage-and-rename.
-        .config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-            os.environ.get("SPARK_GRAFT_COMMITTER_ALGORITHM", "1"),
-        )
+        # to win (r14 A/B: see OPTIMIZATION_r14.md).
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "1")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

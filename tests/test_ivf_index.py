@@ -1354,6 +1354,34 @@ def test_ivfpq_batch_distributed_equals_collect_path(spark, tmp_path):
     assert nc["ObjectHashAggregate"] >= 2, nc
 
 
+def test_ivfpq_batch_probes_raise_on_missing_centroid_sidecar(spark, tmp_path):
+    """Both batch probe shapes read the centroid sidecar through
+    `storage`, so an index whose sidecar is gone fails the same way in
+    each: FileNotFoundError, not a Spark AnalysisException from one of
+    them."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        build_ivfpq_index,
+        query_ivfpq_index_batch,
+        query_ivfpq_index_batch_distributed,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = similarity.train_centroids_exact(
+        emb, k=8, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    shutil.rmtree(f"{path}_centroids")
+    qs = emb.filter(F.col("vec_id").isin([2, 3]))
+    for probe in (query_ivfpq_index_batch, query_ivfpq_index_batch_distributed):
+        with pytest.raises(FileNotFoundError):
+            probe(spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb)
+
+
 def test_ivfpq_manifest_segments_append_only(spark, tmp_path):
     """A refresh after one append must add exactly ONE new file to the
     manifest dir and leave every prior segment file byte-untouched
@@ -1523,49 +1551,14 @@ def test_ivfpq_manifest_zero_row_file_converges(spark, tmp_path):
     assert a == b
 
 
-def test_ivfpq_distributed_lut_strategies_row_identical(spark, tmp_path):
-    """The 'join' LUT strategy (broadcast codebook frame + fold, for
-    PQ shapes whose unrolled literals would blow codegen limits) must
-    be row-for-row identical to the 'unrolled' strategy — and 'auto'
-    at gate-scale parameters must pick unrolled (asserted via the plan
-    carrying no codebook-frame join)."""
-    from pyspark.sql import functions as F
-
-    from fb_ads_bigquery_etl_spark.operators.pq import (
-        build_ivfpq_index,
-        query_ivfpq_index_batch_distributed,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = similarity.train_centroids_exact(
-        emb, k=16, iters=2
-    ).localCheckpoint(eager=True)
-    path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(emb, path, in_dim=64, m=4, ksub=8, centroids=cents)
-    qs = emb.filter(F.col("vec_id").isin([2, 3, 7, 19]))
-
-    def run(strategy):
-        return [
-            tuple(r)
-            for r in query_ivfpq_index_batch_distributed(
-                spark, path, qs, k=10, nprobe=2, expand=10,
-                rerank_src=emb, lut_strategy=strategy,
-            ).collect()
-        ]
-
-    unrolled = run("unrolled")
-    assert unrolled == run("join")
-    assert unrolled == run("auto")
-
-
 def test_ivfpq_distributed_salted_join_on_hot_bucket(spark, tmp_path):
     """Skew-proofing the distributed probe's scoring join: on a corpus
     where one bucket holds the vast majority of codes (identical
     vectors all assign to one bucket whatever the centroids are), the
     salted join must (a) key on (bucket, _salt) in the physical plan —
-    spreading the hot bucket over `salt` tasks instead of serializing
-    one — and (b) stay row-for-row equal to the collect-based batch
-    path; salt=1 must too (the disable path)."""
+    spreading the hot bucket over `_SCORE_SALT` tasks instead of
+    serializing one — and (b) stay row-for-row equal to the
+    collect-based batch path."""
     from pyspark.sql import functions as F
 
     from fb_ads_bigquery_etl_spark.operators.pq import (
@@ -1608,21 +1601,16 @@ def test_ivfpq_distributed_salted_join_on_hot_bucket(spark, tmp_path):
 
     qs = emb.filter(F.col("vec_id").isin([0, 3, 7]))
     got = query_ivfpq_index_batch_distributed(
-        spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=corpus,
-        salt=8,
+        spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=corpus
     )
     plan = PI.explain_str(got)
     assert "_salt" in plan, plan[:2000]
     want = query_ivfpq_index_batch(
         spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=corpus
     )
-    want_rows = [tuple(r) for r in want.collect()]
-    assert [tuple(r) for r in got.collect()] == want_rows
-    unsalted = query_ivfpq_index_batch_distributed(
-        spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=corpus,
-        salt=1,
-    )
-    assert [tuple(r) for r in unsalted.collect()] == want_rows
+    assert [tuple(r) for r in got.collect()] == [
+        tuple(r) for r in want.collect()
+    ]
 
 
 def test_ivfpq_bucket_split_exact_and_scoped(spark, tmp_path):
@@ -1922,22 +1910,17 @@ def test_ivfpq_split_crash_recovery(spark, tmp_path, monkeypatch, store):
 
 
 def test_ivfpq_distributed_lut_auto_join_at_realistic_ksub(spark, tmp_path):
-    """The LUT join-strategy fallback at the PQ shape that motivates
-    it: m=8, ksub=256, sub=8 -> m*ksub*sub = 16384 literals, 4x past
-    _LUT_UNROLL_MAX_LITERALS, where the unrolled form's generated code
-    would blow Janino/constant-pool limits. lut_strategy='auto' must
-    pick the join path (asserted from the loaded codebook shape
-    against the documented threshold) and the probe must run end to
-    end ROW-IDENTICAL to the collect-based batch path, whose LUTs are
-    built driver-side with numpy and are codegen-free — the strongest
-    available cross-check at this shape (recall parity follows from
-    row identity). Codebooks are pinned, not trained: the shape is
-    what is under test, and build/encode are Arrow-batched kernels
-    indifferent to ksub."""
+    """The distributed probe's data-sided LUT build at a realistic PQ
+    shape: m=8, ksub=256, sub=8 (m*ksub*sub = 16384 codeword entries).
+    The probe must run end to end ROW-IDENTICAL to the collect-based
+    batch path, whose LUTs are built driver-side in plain Python — the
+    strongest available cross-check at this shape (recall parity
+    follows from row identity). Codebooks are pinned, not trained: the
+    shape is what is under test, and build/encode are Arrow-batched
+    kernels indifferent to ksub."""
     from pyspark.sql import functions as F
 
     from fb_ads_bigquery_etl_spark.operators.pq import (
-        _LUT_UNROLL_MAX_LITERALS,
         build_ivfpq_index,
         load_codebooks,
         query_ivfpq_index_batch,
@@ -1966,12 +1949,11 @@ def test_ivfpq_distributed_lut_auto_join_at_realistic_ksub(spark, tmp_path):
     n_literals = (
         len(got_cb) * len(got_cb[0]) * len(got_cb[0][0])
     )
-    assert n_literals == 16384 > _LUT_UNROLL_MAX_LITERALS  # auto->join
+    assert n_literals == 16384
 
     qs = emb.filter(F.col("vec_id").isin([2, 3, 7, 19, 42]))
     got = query_ivfpq_index_batch_distributed(
-        spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb,
-        lut_strategy="auto",
+        spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb
     )
     want = query_ivfpq_index_batch(
         spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb

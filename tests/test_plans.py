@@ -856,3 +856,49 @@ def test_unified_manifest_prune_is_metadata_lookup(spark, tmp_path):
         len(read_files), len(all_files),
     )
     assert got.count() == 1
+
+
+def test_ivfpq_batch_probe_plan_shape(spark, tmp_path):
+    """The persisted index's serving probe (the benchmark's query op)
+    keeps its plan: one partition-pruned code scan, broadcast joins for
+    the tombstone anti-join, the LUT frame, the candidate list and the
+    query vectors, and exactly two per-query windows (candidate top
+    k*expand, rerank top k) whose exchanges, plus the final sort's, are
+    the only shuffles."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators import similarity
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        build_ivfpq_index,
+        delete_from_ivfpq_index,
+        query_ivfpq_index_batch,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = similarity.train_centroids_exact(
+        emb, k=16, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    delete_from_ivfpq_index(
+        spark, emb.filter(F.col("vec_id") % 11 == 0).select("vec_id"), path
+    )
+    qs = emb.filter(F.col("vec_id").isin([2, 3, 7, 19]))
+    plan = PI.explain_str(
+        query_ivfpq_index_batch(
+            spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb
+        )
+    )
+    nc = PI.node_counts(plan)
+    assert (nc["Window"], nc["BroadcastHashJoin"], nc["Exchange"]) == (
+        2, 4, 3
+    ), nc
+    scans = re.split(r"\n(?=\(\d+\) )", plan)
+    pruned = [
+        d for d in scans
+        if re.match(r"\(\d+\) Scan parquet", d)
+        and re.search(r"PartitionFilters: \[bucket#\d+ IN", d)
+    ]
+    assert len(pruned) == 1, plan[:3000]
