@@ -6719,7 +6719,15 @@ def _trained_cents_cte(
     qc -> qc/1e6 -> round trip is exact, so chaining on the INT form
     is identical). `k` may be a SQL subexpression (e.g.
     "(SELECT CAST(floor(sqrt(COUNT(*))) AS BIGINT) FROM tx)") for
-    data-dependent nlist — DuckDB accepts subqueries in LIMIT."""
+    data-dependent nlist — DuckDB accepts subqueries in LIMIT.
+
+    Every CTE of the chain is declared `AS MATERIALIZED`: DuckDB 1.0
+    inlines a non-materialized CTE at every reference, `c{i}` reads
+    `c{i-1}` twice (through `a{i}` and the COALESCE join) and `x` is
+    read once per iteration, and chains compose through
+    `src_where`/`init_from`, so the inlined plan grows multiplicatively
+    with the iterations — inlined, the ivfpq_bucket_merge oracle ran
+    DuckDB out of memory."""
 
     def dist(xi: str, c: str) -> str:
         return (
@@ -6729,7 +6737,7 @@ def _trained_cents_cte(
 
     P = prefix
     parts = [
-        f"""{P}x AS (
+        f"""{P}x AS MATERIALIZED (
           SELECT vec_id,
                  list_transform(embedding,
                    e -> CAST(floor(CAST(e AS DOUBLE)*{scale}) AS BIGINT)) AS xi
@@ -6737,34 +6745,34 @@ def _trained_cents_cte(
     ]
     if init_from is not None:
         parts.append(
-            f"{P}c0 AS (SELECT cluster, c FROM {init_from})"
+            f"{P}c0 AS MATERIALIZED (SELECT cluster, c FROM {init_from})"
         )
     else:
-        parts.append(f"""{P}c0 AS (
+        parts.append(f"""{P}c0 AS MATERIALIZED (
           SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster,
                  xi AS c
           FROM (SELECT vec_id, xi FROM {P}x ORDER BY vec_id LIMIT {k}))""")
     for i in range(1, iters + 1):
         prev = f"{P}c{i - 1}"
-        parts.append(f"""{P}a{i} AS (
+        parts.append(f"""{P}a{i} AS MATERIALIZED (
           SELECT {P}x.xi, best.cluster
           FROM {P}x, LATERAL (
             SELECT c.cluster, {dist(f"{P}x.xi", "c.c")} AS dist
             FROM {prev} c ORDER BY 2 ASC, 1 ASC LIMIT 1) best)""")
-        parts.append(f"""{P}s{i} AS (
+        parts.append(f"""{P}s{i} AS MATERIALIZED (
           SELECT cluster, i AS d, CAST(SUM(xi[i]) AS BIGINT) AS s, COUNT(*) AS n
           FROM {P}a{i} CROSS JOIN range(1,{dim + 1}) t(i) GROUP BY 1, 2)""")
         # exact floor division (DuckDB // truncates toward zero)
-        parts.append(f"""{P}n{i} AS (
+        parts.append(f"""{P}n{i} AS MATERIALIZED (
           SELECT cluster, list(cd ORDER BY d) AS c FROM (
             SELECT cluster, d,
                    CASE WHEN s >= 0 THEN s // n
                         ELSE -((-s + n - 1) // n) END AS cd
             FROM {P}s{i}) GROUP BY 1)""")
-        parts.append(f"""{P}c{i} AS (
+        parts.append(f"""{P}c{i} AS MATERIALIZED (
           SELECT p.cluster, COALESCE(q.c, p.c) AS c
           FROM {prev} p LEFT JOIN {P}n{i} q USING (cluster))""")
-    parts.append(f"""{cents_name} AS (
+    parts.append(f"""{cents_name} AS MATERIALIZED (
           SELECT CAST(cluster AS BIGINT) AS centroid_id,
                  list_transform(c, v -> v / {scale}.0) AS ce
           FROM {P}c{iters})""")

@@ -3,6 +3,8 @@ must match its oracle_sql() on DuckDB, bit-exactly, at the test SF."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -71,3 +73,21 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns
+
+
+@pytest.mark.parametrize("init_from", [None, "prev_c2"])
+def test_trained_cents_cte_chain_is_materialized(init_from):
+    """DuckDB 1.0 re-expands a non-materialized CTE at every reference;
+    the unrolled Lloyd chain reads each c{i-1} twice, so inlined it grows
+    multiplicatively (the ivfpq_bucket_merge oracle ran out of memory).
+    Plain text check: on a box with more memory the inlined oracle may
+    only be slow, which the parity test would not flag."""
+    sql = entry_mod._trained_cents_cte(16, 2, init_from=init_from)
+    decls = re.findall(r"(\w+) AS (MATERIALIZED )?\(", sql)
+    names = [n for n, _ in decls]
+    assert names == [
+        "tx", "tc0", "ta1", "ts1", "tn1", "tc1", "ta2", "ts2", "tn2", "tc2",
+        "cents",
+    ]
+    plain = [n for n, mat in decls if not mat]
+    assert not plain, f"CTEs not declared AS MATERIALIZED: {plain}"
