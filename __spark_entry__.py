@@ -757,13 +757,10 @@ def _stage_sentinels(spark, sf_dir, landing):
                 far = mx + hours * 3600 * 10**9  # raw nanos (<=4.0 read)
             else:
                 far = mx + datetime.timedelta(hours=hours)
-            # one explicit slice (session.local_df): createDataFrame's
-            # default-parallelism split + coalesce(1) stalled ~6 s PER
-            # SENTINEL WRITE on scheduling 32 empty parent slices into
-            # one task (r14 jobs profile; the storage.Hadoop write
-            # note measured the same pathology) — the cold first
-            # streaming gate of every session paid ~12 s for two 2-row
-            # files
+            # session.local_df spreads the two rows over up to
+            # default-parallelism slices: coalesce, so the write leaves
+            # the ONE file the copy below takes (a second file would
+            # silently drop a sentinel row)
             from fb_ads_bigquery_etl_spark.session import local_df
 
             srow = local_df(
@@ -775,7 +772,7 @@ def _stage_sentinels(spark, sf_dir, landing):
                 schema,
             )
             tmp_out = os.path.join(cache_dir, f"w{i}")
-            srow.write.mode("overwrite").parquet(tmp_out)
+            srow.coalesce(1).write.mode("overwrite").parquet(tmp_out)
             part = next(
                 f for f in os.listdir(tmp_out) if f.endswith(".parquet")
             )

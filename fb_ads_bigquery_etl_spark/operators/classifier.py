@@ -303,10 +303,9 @@ def train_classifier(
             n_feat_docs = 0
             for it in range(iters):
                 if w:
-                    # vocab-sized weight table: one slice
-                    # (session.local_df) — the default-parallelism
-                    # split costs a full task wave per broadcast
-                    # build, every iteration
+                    # vocab-sized weight table as a local relation
+                    # (session.local_df): its broadcast build runs no
+                    # Python worker, every iteration
                     wdf = local_df(
                         spark, sorted(w.items()), "bucket long, w long"
                     )

@@ -578,6 +578,9 @@ def _residuals(
 
 _CENTROID_SCHEMA = "centroid_id long, cvec array<double>, cnorm double"
 _CODEBOOK_SCHEMA = "m int, c int, cw array<long>"
+# the code table: `bucket` is the partition column. Declared, so a read
+# never pays a schema-inference job over the code files.
+_CODES_SCHEMA = "id long, codes array<int>, bucket int"
 
 
 def _write_centroid_sidecar(spark, cents: DataFrame, dirpath: str) -> None:
@@ -601,6 +604,21 @@ def _read_centroids(spark, path: str) -> list[dict]:
     if rows is None:
         raise FileNotFoundError(f"no IVF-PQ centroid sidecar at {d}")
     return rows
+
+
+def _centroid_df(spark, path: str) -> DataFrame:
+    """The centroid sidecar as a local relation: its rows sit in the
+    plan, so a later overwrite of the sidecar cannot change it."""
+    return local_df(spark, _read_centroids(spark, path), _CENTROID_SCHEMA)
+
+
+def _read_codes(spark, path: str, *files: str) -> DataFrame:
+    """The code table under its declared schema: all of it, or only
+    `files` (full paths of code files under `path`)."""
+    reader = spark.read.schema(_CODES_SCHEMA)
+    if files:
+        return reader.option("basePath", path).parquet(*files)
+    return reader.parquet(path)
 
 
 def load_codebooks(spark, path: str) -> list[list[list[int]]]:
@@ -773,7 +791,7 @@ def append_ivfpq_index(
                 f"ids {sorted(r['id'] for r in clash)} (first 5) are "
                 "tombstoned; compact_ivfpq_index before re-adding them"
             )
-    centroids = spark.read.parquet(f"{path}_centroids")
+    centroids = _centroid_df(spark, path)
     cb = load_codebooks(spark, path)
     _, resid = _residuals(delta, centroids, vec_col=vec_col, id_col=id_col)
     codes = encode_ints(
@@ -834,11 +852,9 @@ def retrain_ivfpq_codebooks(
             "(the rebuild re-encodes from the caller's corpus and "
             "would bypass logical deletes)"
         )
-    # materialize: the rebuild below OVERWRITES the centroid sidecar
-    # this frame reads from (metadata-sized)
-    centroids = spark.read.parquet(f"{path}_centroids").localCheckpoint(
-        eager=True
-    )
+    # a local relation: the rebuild below OVERWRITES the sidecar it
+    # was read from
+    centroids = _centroid_df(spark, path)
     old_cb = load_codebooks(spark, path)
     m, ksub, sub = len(old_cb), len(old_cb[0]), len(old_cb[0][0])
     in_dim = m * sub
@@ -1032,16 +1048,14 @@ def split_ivfpq_bucket(
     # collected to a local frame (metadata-sized; the max is a Python
     # max, not an agg job)
     crows = _read_centroids(spark, path)
-    cents = local_df(
-        spark, [tuple(r.values()) for r in crows], _CENTROID_SCHEMA
-    )
+    cents = local_df(spark, crows, _CENTROID_SCHEMA)
     cb = load_codebooks(spark, path)
     max_id = max(int(r["centroid_id"]) for r in crows)
 
     # member vectors via the index's id set: a partition-pruned scan
     # of ONE bucket's narrow codes, then a semi-join into src
     member_ids = (
-        spark.read.parquet(path)
+        _read_codes(spark, path)
         .filter(F.col("bucket") == bucket)
         .select("id")
     )
@@ -1105,7 +1119,7 @@ def _reassign_and_publish(
     _, new_assign = assign_ivf_buckets(
         src, vec_col=vec_col, id_col=id_col, centroids=new_cents
     )
-    old_assign = spark.read.parquet(path).select(
+    old_assign = _read_codes(spark, path).select(
         "id", F.col("bucket").alias("_ob")
     )
     new_assign = new_assign.select("id", F.col("bucket").alias("_nb"))
@@ -1147,7 +1161,7 @@ def _reassign_and_publish(
     arrivals = encode_ints(
         resid, cb, int_col="_r", id_col="id", extra_cols=("bucket",)
     )
-    stay = spark.read.parquet(path).filter(
+    stay = _read_codes(spark, path).filter(
         F.col("bucket").isin(touched)
     ).join(moved.select("id"), "id", "left_anti")
     out = (
@@ -1250,9 +1264,7 @@ def merge_ivfpq_buckets(
     # known-id check and the parent retirement all read it without
     # touching the files the publish below replaces
     crows = _read_centroids(spark, path)
-    cents = local_df(
-        spark, [tuple(r.values()) for r in crows], _CENTROID_SCHEMA
-    )
+    cents = local_df(spark, crows, _CENTROID_SCHEMA)
     explicit = buckets is not None
     if buckets is None:
         # the manifest is only consulted by the cold pick; an
@@ -1296,7 +1308,7 @@ def merge_ivfpq_buckets(
     max_id = max(known)
 
     member_ids = (
-        spark.read.parquet(path)
+        _read_codes(spark, path)
         .filter(F.col("bucket").isin([b1, b2]))
         .select("id")
     )
@@ -1396,7 +1408,7 @@ def _read_ivfpq_manifest(spark, path: str) -> DataFrame | None:
     file in the original 8-column schema, so every consumer (stats,
     compaction, envelope pruning, the gates) is segment-agnostic. The
     fold runs on the driver (metadata-sized by construction) and
-    returns a one-slice local frame."""
+    returns a local relation (`session.local_df`)."""
     rows = _read_manifest_segment_rows(spark, path)
     if rows is None:
         return None
@@ -1617,10 +1629,9 @@ def _pruned_tombstoned_codes(
         .collect()
     ]
     if not cand:
-        return spark.createDataFrame([], "id long, bucket int")
+        return local_df(spark, [], "id long, bucket int")
     return (
-        spark.read.option("basePath", path)
-        .parquet(*cand)
+        _read_codes(spark, path, *cand)
         .select("id", "bucket")
         .join(tomb, "id", "left_semi")
     )
@@ -1767,7 +1778,7 @@ def compact_ivfpq_index(
         else:
             work = frag
     else:
-        codes = spark.read.parquet(path)
+        codes = _read_codes(spark, path)
         frag = (
             codes.select("bucket", F.input_file_name().alias("_f"))
             .groupBy("bucket")
@@ -1798,7 +1809,7 @@ def compact_ivfpq_index(
         _prune_tombstones(spark, path, tomb, man)
         return []
 
-    live = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
+    live = _read_codes(spark, path).filter(F.col("bucket").isin(buckets))
     if tomb is not None:
         live = live.join(tomb, "id", "left_anti")
     # materialize BEFORE overwriting the files being read
@@ -1841,7 +1852,7 @@ def _prune_tombstones(
             "id"
         )
     else:
-        backing = spark.read.parquet(path).select("id")
+        backing = _read_codes(spark, path).select("id")
     remaining = tomb.join(backing, "id", "left_semi").localCheckpoint(
         eager=True
     )
@@ -1915,7 +1926,7 @@ def ivfpq_index_stats(
             F.coalesce(F.col("_nd"), F.lit(0)).cast("long")
             .alias("n_deleted"),
         ).orderBy("bucket")
-    codes = spark.read.parquet(path).select("id", "bucket")
+    codes = _read_codes(spark, path).select("id", "bucket")
     if tomb is not None:
         flagged = codes.join(
             tomb.withColumn("_dead", F.lit(1)).distinct(), "id", "left"
@@ -1943,7 +1954,7 @@ def _probe_codes(spark, path: str, buckets: list[int]) -> DataFrame:
     is visible to the next query (plain join — the pending-delete set
     is not metadata-sized in general)."""
     _check_no_split_inflight(spark, path)
-    codes = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
+    codes = _read_codes(spark, path).filter(F.col("bucket").isin(buckets))
     tomb = _read_tombstones(spark, path)
     if tomb is not None:
         codes = codes.join(tomb, "id", "left_anti")
@@ -2030,6 +2041,20 @@ def query_ivfpq_index_batch(
     )
 
 
+def _ranked(reranked: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The batch probes' result: the top `k` reranked rows per query,
+    ordered by (query_id, score desc, id). Those are Q*k rows, so ONE
+    task sorts them; a global orderBy would pay a sampling job and a
+    range shuffle to order them. (A query TABLE in the distributed
+    shape still ends in that one task: its result is Q*k rows too.)"""
+    rank = (F.col("score").desc(), F.col(id_col).asc())
+    return (
+        _top_k(reranked, "query_id", k, *rank)
+        .coalesce(1)
+        .sortWithinPartitions("query_id", *rank)
+    )
+
+
 def _probe_batch(
     spark,
     path: str,
@@ -2094,9 +2119,7 @@ def _probe_batch(
             cosine_similarity(F.col("_cv"), F.col("_qv")).alias("score"),
         )
     )
-    return _top_k(
-        reranked, "query_id", k, F.col("score").desc(), F.col(id_col).asc()
-    ).orderBy("query_id", F.col("score").desc(), F.col(id_col).asc())
+    return _ranked(reranked, k, id_col)
 
 
 # the distributed probe's scoring join spreads each bucket over this
@@ -2159,7 +2182,7 @@ def query_ivfpq_index_batch_distributed(
         topk_per_group_structs,
     )
 
-    cents = local_df(spark, _read_centroids(spark, path), _CENTROID_SCHEMA)
+    cents = _centroid_df(spark, path)
     cb = load_codebooks(spark, path)
     sub = len(cb[0][0])
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -2283,6 +2306,4 @@ def query_ivfpq_index_batch_distributed(
             cosine_similarity(F.col("_cv"), F.col("_qv")).alias("score"),
         )
     )
-    return _top_k(
-        reranked, "query_id", k, F.col("score").desc(), F.col(id_col).asc()
-    ).orderBy("query_id", F.col("score").desc(), F.col(id_col).asc())
+    return _ranked(reranked, k, id_col)

@@ -12,22 +12,29 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from fb_ads_bigquery_etl_spark import storage
 
-def local_df(spark: SparkSession, rows, schema: str):
-    """createDataFrame for METADATA-SIZED driver-side row lists (LUTs,
-    centroid/codebook sidecars, per-iteration weight tables): one
-    explicit slice instead of the default-parallelism split. The
-    default scatters 16 rows over 32 empty partitions, so every
-    downstream action (broadcast build, sidecar write) schedules 32
-    tasks for a handful of rows — measured 0.5 s per sidecar write at
-    local[32], ~0.15 s with one slice; same story on a cluster, where
-    default parallelism is far larger. Row order and typing are
-    identical to the multi-slice form (guide §2.4: remove work the
-    operation never needed)."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    rdd = spark.sparkContext.parallelize(rows, 1)
-    return spark.createDataFrame(rdd, schema)
+
+def local_df(spark: SparkSession, rows, schema):
+    """createDataFrame for METADATA-SIZED driver-side rows (LUTs,
+    query vectors, centroid/codebook/manifest sidecars, per-iteration
+    weight tables): tuples or dicts under a DDL string or StructType.
+
+    Built as an Arrow local relation: the rows go into a pyarrow Table
+    on the driver and sit in the plan as a `LocalTableScan`. The
+    RDD-based form (`parallelize` + `createDataFrame(rdd, schema)`)
+    maps every row through a Python worker on EVERY scan, so each
+    broadcast build or join of it was a Python job (150-190 ms each in
+    a warm IVF-PQ batch probe on a 4-core box); a local relation's
+    scan runs in the JVM alone (15-25 ms there). Values convert
+    exactly as the row path converts them (`storage.arrow_table`).
+
+    A local relation spreads its rows over min(n, default parallelism)
+    slices, so a writer that must leave ONE file coalesces first
+    (`storage.Hadoop.write_rows_atomic`)."""
+    return spark.createDataFrame(
+        storage.arrow_table(rows, schema), storage.spark_schema(schema)
+    )
 
 
 def coalesce_metadata_stages(fn):

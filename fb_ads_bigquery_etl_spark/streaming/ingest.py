@@ -161,12 +161,13 @@ def stream_ivfpq_ingest(
     checkpoint+ledger by rebuilding or snapshotting the index, not by
     re-draining history."""
     from fb_ads_bigquery_etl_spark.operators.pq import (
+        _centroid_df,
         _residuals,
         encode_ints,
         load_codebooks,
     )
 
-    centroids = spark.read.parquet(f"{index_path}_centroids")
+    centroids = _centroid_df(spark, index_path)
     cb = load_codebooks(spark, index_path)
 
     def _transform(batch_df):

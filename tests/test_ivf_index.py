@@ -1382,6 +1382,82 @@ def test_ivfpq_batch_probes_raise_on_missing_centroid_sidecar(spark, tmp_path):
             probe(spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb)
 
 
+def test_ivfpq_maintenance_verbs_raise_on_missing_centroid_sidecar(
+    spark, tmp_path
+):
+    """Append, codebook retrain and streaming ingest read the centroid
+    sidecar through `storage` too, so a missing sidecar fails them as it
+    fails every probe: FileNotFoundError, before anything is written."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        append_ivfpq_index,
+        build_ivfpq_index,
+        retrain_ivfpq_codebooks,
+    )
+    from fb_ads_bigquery_etl_spark.streaming.ingest import (
+        stream_ivfpq_ingest,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    delta = emb.filter(F.col("vec_id") % 3 == 0)
+    cents = similarity.train_centroids_exact(
+        base, k=8, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(base, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    landing = str(tmp_path / "landing")
+    delta.limit(8).write.parquet(landing)
+    shutil.rmtree(f"{path}_centroids")
+    def files():
+        return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs}
+
+    before = files()
+    with pytest.raises(FileNotFoundError):
+        append_ivfpq_index(spark, delta, path)
+    with pytest.raises(FileNotFoundError):
+        retrain_ivfpq_codebooks(spark, emb, path)
+    with pytest.raises(FileNotFoundError):
+        stream_ivfpq_ingest(
+            spark, landing, path, checkpoint_path=str(tmp_path / "ckpt")
+        )
+    assert files() == before
+
+
+def test_ivfpq_code_table_declared_schema_equals_inferred(spark, tmp_path):
+    """`_CODES_SCHEMA`, the schema every code-table read declares, is
+    the schema Spark infers from the files after a build, an append, a
+    split and a merge, and both reads return the same rows."""
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        _CODES_SCHEMA,
+        append_ivfpq_index,
+        build_ivfpq_index,
+        merge_ivfpq_buckets,
+        split_ivfpq_bucket,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    cents = similarity.train_centroids_exact(
+        base, k=8, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(base, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    append_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 0), path)
+    split_ivfpq_bucket(spark, emb, path)
+    merge_ivfpq_buckets(spark, emb, path)
+    inferred = spark.read.parquet(path)
+    declared = spark.read.schema(_CODES_SCHEMA).parquet(path)
+    assert declared.schema == inferred.schema
+    assert sorted(declared.collect()) == sorted(inferred.collect())
+
+
 def test_ivfpq_manifest_segments_append_only(spark, tmp_path):
     """A refresh after one append must add exactly ONE new file to the
     manifest dir and leave every prior segment file byte-untouched

@@ -863,8 +863,8 @@ def test_ivfpq_batch_probe_plan_shape(spark, tmp_path):
     keeps its plan: one partition-pruned code scan, broadcast joins for
     the tombstone anti-join, the LUT frame, the candidate list and the
     query vectors, and exactly two per-query windows (candidate top
-    k*expand, rerank top k) whose exchanges, plus the final sort's, are
-    the only shuffles."""
+    k*expand, rerank top k) whose exchanges are the only shuffles: the
+    final Q*k rows are ordered in one task, with no range shuffle."""
     import re
 
     from pyspark.sql import functions as F
@@ -893,7 +893,7 @@ def test_ivfpq_batch_probe_plan_shape(spark, tmp_path):
     )
     nc = PI.node_counts(plan)
     assert (nc["Window"], nc["BroadcastHashJoin"], nc["Exchange"]) == (
-        2, 4, 3
+        2, 4, 2
     ), nc
     scans = re.split(r"\n(?=\(\d+\) )", plan)
     pruned = [

@@ -1,11 +1,17 @@
 """storage: which filesystem an engine file lives on, and the verbs both
-backends share."""
+backends share; session.local_df, the driver-side frames both build on."""
 
 from __future__ import annotations
 
+import datetime
+import os
+
 import pytest
+from pyspark.sql import types as T
 
 from fb_ads_bigquery_etl_spark import storage
+from fb_ads_bigquery_etl_spark.plans import inspect as PI
+from fb_ads_bigquery_etl_spark.session import local_df
 
 
 def test_bare_path_takes_the_default_fs_scheme(spark, monkeypatch):
@@ -71,3 +77,67 @@ def test_backend_verbs_round_trip(spark, tmp_path, store):
     st.delete(root)
     assert not st.exists(root) and st.list_files(root) == []
     st.delete(root)  # a missing path is a no-op
+
+
+_TS_STRUCT = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("ts_ntz", T.TimestampNTZType()),
+    T.StructField("event_type", T.StringType()),
+])
+
+# every row shape session.local_df serves: scalar columns, the index's
+# array columns, dict rows (centroid sidecar reads), tuple rows, an
+# empty table, and a StructType with timestamps (the streaming
+# sentinel rows, whose events schema reads `ts` as either type)
+_LOCAL_DF_CASES = {
+    "scalars": ([(1, 2, 3.5, "a"), (-4, None, None, None)],
+                "a long, b int, c double, s string"),
+    "array_long": ([(1, [2, -3]), (2, [])], "k long, v array<long>"),
+    "lut": ([(0, 3, -7, [[1, 2], [3, 4]]), (1, 5, 0, [[0], []])],
+            "qid long, b long, term1 long, lut array<array<long>>"),
+    "array_double": ([(0, [0.1, -2.5e-300, 1e300])],
+                     "query_id long, _qv array<double>"),
+    "dict_rows": ([{"centroid_id": 1, "cvec": [0.5, -1.25], "cnorm": 0.5},
+                   {"cnorm": None, "centroid_id": 2, "cvec": None}],
+                  "centroid_id long, cvec array<double>, cnorm double"),
+    "empty": ([], "bucket long, w long"),
+    "timestamps": (
+        [(10**9, datetime.datetime(2026, 3, 1, 12, 30, 5, 123456),
+          datetime.datetime(2026, 3, 1, 12, 30, 5, 123456), "view"),
+         (10**9 + 1, datetime.datetime(1969, 12, 31, 23, 59, 59, 1),
+          datetime.datetime(1969, 12, 31, 23, 59, 59, 1), "purchase")],
+        _TS_STRUCT,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LOCAL_DF_CASES))
+def test_local_df_equals_the_rdd_row_path(spark, case):
+    """An Arrow local relation holds exactly what the row path
+    (`parallelize` + `createDataFrame(rdd, schema)`) builds — same
+    schema, same values — and plans as a LocalTableScan, so no scan
+    runs a Python worker."""
+    rows, schema = _LOCAL_DF_CASES[case]
+    got = local_df(spark, rows, schema)
+    want = (
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        if rows else spark.createDataFrame([], schema)
+    )
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = PI.explain_str(got)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_hadoop_write_rows_atomic_leaves_one_file(spark, tmp_path, store):
+    """A local relation spreads 16 rows over several slices; the write
+    still leaves exactly one data file."""
+    assert spark.sparkContext.defaultParallelism > 1
+    root = str(tmp_path / "d")
+    st = storage.resolve(spark, root)
+    ddl = "k long, v array<long>"
+    rows = [(i, [i, -i]) for i in range(16)]
+    st.write_rows_atomic(root, rows, ddl, "overwrite")
+    assert len([n for n in os.listdir(root) if n.endswith(".parquet")]) == 1
+    assert sorted(tuple(r.values()) for r in st.read_rows(root, ddl)) == rows
