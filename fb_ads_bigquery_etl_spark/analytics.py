@@ -9,11 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def dedup_ctas(df: DataFrame) -> DataFrame:
-    """Q1: SELECT DISTINCT * (README.md:383-385)."""
-    return df.distinct()
-
-
 def freshness(df: DataFrame, date_col: str = "date_start") -> DataFrame:
     """Q2: SELECT MAX(date_start) AS latest_date (docs/DEPLOYMENT.md:448-451)."""
     return df.agg(F.max(date_col).alias("latest_date"))

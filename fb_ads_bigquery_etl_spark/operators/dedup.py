@@ -79,11 +79,6 @@ def salted_dedup_keep_first(
     return dedup_keep_first(local, key, order_by).drop("_salt")
 
 
-def distinct_rows(df: DataFrame) -> DataFrame:
-    """Full-row DISTINCT (reference Q1: SELECT DISTINCT *, README.md:383-385)."""
-    return df.distinct()
-
-
 def duplicated_gram_positions(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from fb_ads_bigquery_etl_spark import storage
+from fb_ads_bigquery_etl_spark.sinks import overwrite_partitions
 
 BUCKET_COL = "_kb"
 META_FILE = "_ivm_meta.json"  # leading _ => invisible to parquet readers
@@ -42,6 +43,15 @@ def _by_bucket(df: DataFrame) -> DataFrame:
     a task — the same one-file-per-partition discipline (and the same
     documented skew valve) as sinks.merge_upsert."""
     return df.repartition(F.col(BUCKET_COL))
+
+
+def _rebuild(df: DataFrame, path: str) -> None:
+    """Full rebuild of a bucket-partitioned view or store: a STATIC
+    overwrite, stated on the writer whatever the session default, so
+    no bucket the new contents vacate survives from the old ones."""
+    _by_bucket(df).write.partitionBy(BUCKET_COL).mode("overwrite").option(
+        "partitionOverwriteMode", "static"
+    ).parquet(path)
 
 
 def _with_bucket(df: DataFrame, key: str, buckets: int) -> DataFrame:
@@ -93,7 +103,7 @@ def build_join_view(
     rewrite only affected buckets. (key, buckets) is persisted beside
     the view and validated by every maintenance entry point."""
     view = _with_bucket(fact, key, buckets).join(F.broadcast(dim), key)
-    _by_bucket(view).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
+    _rebuild(view, path)
     _write_meta(fact.sparkSession, path, key, buckets)
 
 
@@ -189,14 +199,14 @@ def build_max_view(
     fb = _with_bucket(
         fact.select(rid_col, key, val_col), key, buckets
     )
-    _by_bucket(fb).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(store_path)
+    _rebuild(fb, store_path)
     spark = fact.sparkSession
     _write_meta(spark, store_path, key, buckets)
     view = fb.groupBy(BUCKET_COL, key).agg(
         F.max(val_col).alias(f"max_{val_col}"),
         F.count("*").alias("n_rows"),
     )
-    _by_bucket(view).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(view_path)
+    _rebuild(view, view_path)
     _write_meta(spark, view_path, key, buckets)
 
 
@@ -210,12 +220,7 @@ def _overwrite_touched(
     overwrites."""
     out = df.localCheckpoint(eager=True)
     nonempty = {r[0] for r in out.select(BUCKET_COL).distinct().collect()}
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _by_bucket(out).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(_by_bucket(out), path, partition_col=BUCKET_COL)
     st = storage.resolve(spark, path)
     for b in touched:
         if b not in nonempty:
@@ -339,14 +344,14 @@ def build_distinct_view(
     change touches, which bucket-aligning the store with the view
     makes O(touched), never O(view)."""
     fb = _with_bucket(fact.select(rid_col, key, val_col), key, buckets)
-    _by_bucket(fb).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(store_path)
+    _rebuild(fb, store_path)
     spark = fact.sparkSession
     _write_meta(spark, store_path, key, buckets)
     view = fb.groupBy(BUCKET_COL, key).agg(
         F.countDistinct(val_col).alias(f"n_distinct_{val_col}"),
         F.count("*").alias("n_rows"),
     )
-    _by_bucket(view).write.partitionBy(BUCKET_COL).mode("overwrite").parquet(view_path)
+    _rebuild(view, view_path)
     _write_meta(spark, view_path, key, buckets)
 
 

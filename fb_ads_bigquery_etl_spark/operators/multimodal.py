@@ -63,25 +63,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 # is a no-op (see fuzzy_dedup.spread's docstring).
 from fb_ads_bigquery_etl_spark.operators.fuzzy_dedup import spread
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), nullable=False),
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.LongType()),
-                    T.StructField("codec", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_DIM = 16
 
 _FEATURES_SCHEMA = T.StructType(
@@ -177,23 +158,6 @@ def sample_frames(
         "media_id", "payload", F.col("meta.duration_ms").alias("duration_ms")
     )
     return flat.mapInPandas(kernel, schema=out_schema)
-
-
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for tests (no codecs needed)."""
-    rows = []
-    for i in range(n):
-        mtype = ("image", "audio", "video")[i % 3]
-        payload = hashlib.sha256(str(i).encode()).digest() * (1 + i % 4)
-        rows.append(
-            (
-                i,
-                mtype,
-                bytearray(payload),
-                (64 + i, 48 + i, 3000 + 500 * i, "fake"),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 # (format, hex-prefix at byte 1) — detection is pure JVM expressions on

@@ -38,6 +38,7 @@ from fb_ads_bigquery_etl_spark.session import (
     coalesce_metadata_stages,
     local_df,
 )
+from fb_ads_bigquery_etl_spark.sinks import overwrite_partitions
 
 PQ_SCALE = 1_000_000
 
@@ -676,7 +677,11 @@ def build_ivfpq_index(
     training on `df`'s residuals — the rebuild-equals-append proof
     harness uses it (an O(batch) append encodes against the FROZEN
     sidecars; a rebuild comparing against it must freeze the same
-    ones)."""
+    ones).
+
+    A full rebuild: the code table is a STATIC overwrite, stated on the
+    writer whatever the session's partition-overwrite default, so no
+    bucket the new corpus vacates survives from the old index."""
     # a full rebuild supersedes any interrupted split: clear its
     # staged commit so the fresh index is not gated on recovery
     spark = df.sparkSession
@@ -707,26 +712,12 @@ def build_ivfpq_index(
             # -> ONE file per bucket (the read-optimal layout every
             # probe and the manifest want), instead of one file per
             # (task, bucket) pair — measured 473 files -> nlist files
-            # at sf0.1. Overwrite mode is pinned STATIC: under a
-            # session-level dynamic setting a rebuild over a corpus
-            # that vacated some bucket would leave that bucket's STALE
-            # partition on disk (dynamic replaces only partitions
-            # present in the new write), resurrecting retired codes
-            # after a retrain migration.
-            prev = codes.sparkSession.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            codes.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            try:
-                codes.repartition("bucket").write.mode(
-                    "overwrite"
-                ).partitionBy("bucket").parquet(path)
-            finally:
-                codes.sparkSession.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            # at sf0.1. STATIC: a dynamic overwrite would leave a
+            # vacated bucket's STALE partition on disk, resurrecting
+            # retired codes after a retrain migration.
+            codes.repartition("bucket").write.mode("overwrite").option(
+                "partitionOverwriteMode", "static"
+            ).partitionBy("bucket").parquet(path)
         finally:
             codes.unpersist()
     finally:
@@ -769,28 +760,7 @@ def append_ivfpq_index(
     (pytest-pinned; the `ivfpq_index_append` oracle gate replays the
     whole pipeline)."""
     _check_no_split_inflight(spark, path)
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None:
-        # tombstones carry no sequence numbers, so a tombstoned id
-        # CANNOT be re-added before compaction: the sidecar would hide
-        # the new row from every probe, and clearing it instead would
-        # resurrect the id's stale pre-delete codes still on disk.
-        # Compaction removes the old rows physically and releases the
-        # tombstone; after it this append is clean. (Iceberg solves
-        # the same problem with per-file sequence numbers — this index
-        # keeps the sidecar sequence-free and makes the ordering
-        # constraint explicit.) One O(batch)-sided semi-join.
-        clash = (
-            delta.select(F.col(id_col).cast("long").alias("id"))
-            .join(tomb, "id", "left_semi")
-            .limit(5)
-            .collect()
-        )
-        if clash:
-            raise ValueError(
-                f"ids {sorted(r['id'] for r in clash)} (first 5) are "
-                "tombstoned; compact_ivfpq_index before re-adding them"
-            )
+    _refuse_tombstoned(spark, path, delta, id_col)
     centroids = _centroid_df(spark, path)
     cb = load_codebooks(spark, path)
     _, resid = _residuals(delta, centroids, vec_col=vec_col, id_col=id_col)
@@ -845,13 +815,7 @@ def retrain_ivfpq_codebooks(
     compact_ivfpq_index first (same ordering contract as re-adds).
     Single-writer, like every other index mutation."""
     _check_no_split_inflight(spark, path)
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None and tomb.count() > 0:
-        raise ValueError(
-            "pending tombstones: compact_ivfpq_index before retraining "
-            "(the rebuild re-encodes from the caller's corpus and "
-            "would bypass logical deletes)"
-        )
+    _refuse_pending_tombstones(spark, path, "retraining")
     # a local relation: the rebuild below OVERWRITES the sidecar it
     # was read from
     centroids = _centroid_df(spark, path)
@@ -1025,13 +989,7 @@ def split_ivfpq_bucket(
     )
 
     _check_no_split_inflight(spark, path)
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None and tomb.count() > 0:
-        raise ValueError(
-            "pending tombstones: compact_ivfpq_index before splitting "
-            "(moved rows re-encode from the caller's corpus and would "
-            "bypass logical deletes)"
-        )
+    _refuse_pending_tombstones(spark, path, "splitting")
     man = refresh_ivfpq_manifest(spark, path)
     if bucket is None:
         hot = (
@@ -1253,13 +1211,7 @@ def merge_ivfpq_buckets(
     )
 
     _check_no_split_inflight(spark, path)
-    tomb = _read_tombstones(spark, path)
-    if tomb is not None and tomb.count() > 0:
-        raise ValueError(
-            "pending tombstones: compact_ivfpq_index before merging "
-            "(moved rows re-encode from the caller's corpus and would "
-            "bypass logical deletes)"
-        )
+    _refuse_pending_tombstones(spark, path, "merging")
     # collected to a local frame (metadata-sized): the cold pick, the
     # known-id check and the parent retirement all read it without
     # touching the files the publish below replaces
@@ -1650,6 +1602,46 @@ def _read_tombstones(spark, path: str) -> DataFrame | None:
     return spark.read.schema("id long").parquet(d)
 
 
+def _refuse_tombstoned(spark, path: str, batch: DataFrame, id_col: str) -> None:
+    """Refuse a batch that re-adds a tombstoned id. Tombstones carry no
+    sequence numbers, so a tombstoned id CANNOT be re-added before
+    compaction: the sidecar would hide the new row from every probe,
+    and clearing it instead would resurrect the id's stale pre-delete
+    codes still on disk. Compaction removes the old rows physically and
+    releases the tombstone; after it the re-add is clean. (Iceberg
+    solves the same problem with per-file sequence numbers — this index
+    keeps the sidecar sequence-free and makes the ordering constraint
+    explicit.) One O(batch)-sided semi-join, only while deletes are
+    pending."""
+    tomb = _read_tombstones(spark, path)
+    if tomb is None:
+        return
+    clash = (
+        batch.select(F.col(id_col).cast("long").alias("id"))
+        .join(tomb, "id", "left_semi")
+        .limit(5)
+        .collect()
+    )
+    if clash:
+        raise ValueError(
+            f"ids {sorted(r['id'] for r in clash)} (first 5) are "
+            "tombstoned; compact_ivfpq_index before re-adding them"
+        )
+
+
+def _refuse_pending_tombstones(spark, path: str, verb: str) -> None:
+    """Refuse a verb that re-encodes rows from the caller's corpus
+    (retrain, split, merge) while tombstones are pending: it would
+    bypass logical deletes."""
+    tomb = _read_tombstones(spark, path)
+    if tomb is not None and tomb.count() > 0:
+        raise ValueError(
+            f"pending tombstones: compact_ivfpq_index before {verb} "
+            "(rows re-encode from the caller's corpus and would bypass "
+            "logical deletes)"
+        )
+
+
 @coalesce_metadata_stages
 def delete_from_ivfpq_index(
     spark,
@@ -1708,17 +1700,17 @@ def compact_ivfpq_index(
     fallback (full narrow scan + one `input_file_name` aggregation);
     None auto-detects the sidecar.
 
-    Rewrites go through dynamic partition overwrite so only touched
-    `bucket=` partitions are replaced, one file per bucket
-    (`repartition("bucket")` puts each bucket in exactly one task).
+    Rewrites go through `sinks.overwrite_partitions` (dynamic partition
+    overwrite) so only touched `bucket=` partitions are replaced, one
+    file per bucket (`repartition("bucket")` puts each bucket in
+    exactly one task).
     Only tombstones whose rows were physically removed leave the
     sidecar. Returns the rewritten bucket ids (sorted). The
     materialize-before-overwrite is a localCheckpoint: correct here
     (the rewrite must not read the files it replaces), but its blocks
     live on executors — on a real cluster an executor loss
-    mid-compaction aborts the job (clean: the conf is restored in
-    `finally` and a retry starts over; stage to a temp dir instead if
-    that retry cost ever matters).
+    mid-compaction aborts the job (clean: a retry starts over; stage
+    to a temp dir instead if that retry cost ever matters).
 
     Probe-equality before/after is exact: the anti-join the probe did
     against the sidecar is the same filter compaction bakes into the
@@ -1818,14 +1810,7 @@ def compact_ivfpq_index(
     # the agg re-reads executor blocks, not files)
     pre = _bucket_stats(live)
 
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        live.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(live, path, partition_col="bucket")
 
     if man is not None:
         # the refresh folds piled-up manifest segments itself

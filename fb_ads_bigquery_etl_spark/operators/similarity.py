@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fb_ads_bigquery_etl_spark.functions.portable import dot_product, l2_norm
+from fb_ads_bigquery_etl_spark.operators.pq import _centroid_df, _write_centroid_sidecar
 from fb_ads_bigquery_etl_spark.session import local_df
 
 
@@ -337,18 +338,13 @@ def build_ivf_index(
     )
     # one shuffle puts each bucket in exactly one task -> ONE file per
     # bucket (read-optimal: a probe opens nprobe files, not nprobe x
-    # writer-task-count; same discipline as pq.build_ivfpq_index)
-    assigned.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
+    # writer-task-count; same discipline as pq.build_ivfpq_index), STATIC
+    # like it: a full rebuild leaves no vacated bucket behind
+    assigned.repartition("bucket").write.mode("overwrite").option(
+        "partitionOverwriteMode", "static"
+    ).partitionBy("bucket").parquet(path)
     # nlist-sized sidecar, written through `storage`
-    from fb_ads_bigquery_etl_spark.operators.pq import (
-        _write_centroid_sidecar,
-    )
-
-    _write_centroid_sidecar(
-        df.sparkSession, centroids, f"{path}_centroids"
-    )
+    _write_centroid_sidecar(df.sparkSession, centroids, f"{path}_centroids")
 
 
 def append_ivf_index(
@@ -369,7 +365,7 @@ def append_ivf_index(
     what keeps a vector index maintainable — a rebuild is a full
     corpus re-assignment; an append is one narrow pass over the new
     batch."""
-    centroids = spark.read.parquet(f"{path}_centroids")
+    centroids = _centroid_df(spark, path)
     _, assigned = assign_ivf_buckets(
         delta, vec_col=vec_col, id_col=id_col, centroids=centroids
     )
@@ -392,7 +388,7 @@ def query_ivf_index(
     (driver-side over the tiny centroid table), then partition-pruned
     scan + exact re-scoring inside those buckets only."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cents = spark.read.parquet(f"{path}_centroids")
+    cents = _centroid_df(spark, path)
     probed = [
         r["centroid_id"]
         for r in cents.select(

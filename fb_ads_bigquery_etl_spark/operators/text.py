@@ -85,11 +85,6 @@ def language_id(text: Column) -> Column:
     return bind(tokens(text), language_id_from_tokens)
 
 
-def token_count_ws(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text))
-
-
 def token_count_bpe_ish(text: Column) -> Column:
     """BPE-ish token count: letter runs, digit runs, single punctuation."""
     return F.regexp_count(text, F.lit(BPE_ISH_PATTERN))
@@ -111,21 +106,6 @@ def quality_features(text: Column) -> dict[str, Column]:
         "punct_ratio": n_punct / F.greatest(n_chars, F.lit(1)),
         "mean_word_len": (n_chars - (n_tok - 1)) / F.greatest(n_tok, F.lit(1)),
     }
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality score from length/stopword/punct signals.
-
-    score = 0.4*len_norm + 0.4*stopword_component + 0.2*(1 - punct_ratio)
-    with len_norm = min(n_tokens, 256)/256. Pure double arithmetic on
-    integer-derived inputs => bit-reproducible anywhere.
-    """
-    f = quality_features(text)
-    len_norm = F.least(f["n_tokens"], F.lit(256)).cast("double") / F.lit(256.0)
-    stop_component = F.least(f["stopword_ratio"] * 4.0, F.lit(1.0))
-    return (
-        len_norm * 0.4 + stop_component * 0.4 + (F.lit(1.0) - f["punct_ratio"]) * 0.2
-    )
 
 
 def fingerprint_md5(text: Column) -> Column:

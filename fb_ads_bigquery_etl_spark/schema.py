@@ -53,37 +53,6 @@ _STRING_TYPED_COLUMNS = frozenset(
     }
 )
 
-# Integer-typed metrics in the seed schema (schema.json: INTEGER NULLABLE).
-INT_METRICS: tuple[str, ...] = (
-    "impressions",
-    "clicks",
-    "video_continuous_2_sec_watched_actions",
-    "video_30_sec_watched_actions",
-    "video_p25_watched_actions",
-    "video_p50_watched_actions",
-    "video_p75_watched_actions",
-    "video_p100_watched_actions",
-    "offsite_conversion_fb_pixel_submit_application",
-    "offsite_conversion_fb_pixel_lead",
-)
-
-# Float-typed metrics in the seed schema (schema.json: FLOAT NULLABLE).
-FLOAT_METRICS: tuple[str, ...] = (
-    "spend",
-    "video_avg_time_watched_actions",
-    "page_engagement",
-    "post_engagement",
-    "video_view",
-    "landing_page_view",
-    "omni_landing_page_view",
-    "post_reaction",
-    "link_click",
-    "onsite_web_lead",
-    "lead",
-    "offsite_conversion_fb_pixel_custom",
-    "comment",
-)
-
 # video_* single-element wrapper metrics (main.py:349-356 extract_metric):
 # (column, is_float)
 VIDEO_METRICS: tuple[tuple[str, bool], ...] = (
@@ -94,24 +63,6 @@ VIDEO_METRICS: tuple[tuple[str, bool], ...] = (
     ("video_p50_watched_actions", False),
     ("video_p75_watched_actions", False),
     ("video_p100_watched_actions", False),
-)
-
-# Seed action-type columns baked into schema.json (post dot->underscore
-# rename, main.py:384/390; schema.json:19-33). All FLOAT in the seed.
-SEED_ACTION_COLUMNS: tuple[str, ...] = (
-    "offsite_conversion_fb_pixel_submit_application",
-    "offsite_conversion_fb_pixel_lead",
-    "page_engagement",
-    "post_engagement",
-    "video_view",
-    "landing_page_view",
-    "omni_landing_page_view",
-    "post_reaction",
-    "link_click",
-    "onsite_web_lead",
-    "lead",
-    "offsite_conversion_fb_pixel_custom",
-    "comment",
 )
 
 
@@ -164,38 +115,6 @@ RAW_INSIGHTS_SCHEMA = T.StructType(
         T.StructField("account_id", T.StringType()),
     ]
 )
-
-
-def flat_ad_schema(extra_action_columns: tuple[str, ...] = ()) -> T.StructType:
-    """Canonical flattened `ad_data` schema (schema.json:1-34).
-
-    ``extra_action_columns`` are dynamically discovered action types
-    (already dot-sanitized); the evolution rule types them DOUBLE
-    (main.py:427-434).
-    """
-    fields = [
-        T.StructField("campaign_name", T.StringType(), nullable=False),
-        T.StructField("ad_name", T.StringType(), nullable=False),
-        T.StructField("publisher_platform", T.StringType(), nullable=False),
-        T.StructField("impressions", T.LongType()),
-        T.StructField("clicks", T.LongType()),
-        T.StructField("spend", T.DoubleType()),
-        T.StructField("date_start", T.DateType(), nullable=False),
-        T.StructField("date_stop", T.DateType(), nullable=False),
-    ]
-    for name, is_float in VIDEO_METRICS:
-        fields.append(
-            T.StructField(name, T.DoubleType() if is_float else T.LongType())
-        )
-    for name in SEED_ACTION_COLUMNS:
-        if name in INT_METRICS:
-            fields.append(T.StructField(name, T.LongType()))
-        else:
-            fields.append(T.StructField(name, T.DoubleType()))
-    for name in extra_action_columns:
-        if name not in {f.name for f in fields}:
-            fields.append(T.StructField(name, evolved_type(name)))
-    return T.StructType(fields)
 
 
 def evolved_type(column_name: str) -> T.DataType:

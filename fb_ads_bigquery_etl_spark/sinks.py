@@ -68,24 +68,23 @@ def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
 
 def append_with_schema_evolution(
     spark: SparkSession, df: DataFrame, path: str
-) -> DataFrame:
+) -> None:
     """L4: schema-evolving append.
 
     Reference semantics (main.py:400-438): diff incoming columns vs live
     table, add missing ones as NULLABLE (STRING for the known name list,
     FLOAT otherwise), never retype or drop. Parquet + mergeSchema gives
-    the union-read; this helper enforces the *typing rule* by casting new
-    columns before the write so old and new files agree.
+    the union-read (`read_table`); this helper enforces the *typing
+    rule* by casting new columns before the write so old and new files
+    agree. A table with no partition yet (absent, or only an empty
+    first append's `_SUCCESS`) has no columns to diff against.
     """
-    try:
-        existing_cols = set(spark.read.parquet(path).columns)
-    except Exception:
-        existing_cols = set()
-    new_cols = [c for c in df.columns if c not in existing_cols] if existing_cols else []
-    for c in new_cols:
-        df = df.withColumn(c, F.col(c).cast(evolved_type(c)))
+    if list_partition_values(spark, path):
+        existing = set(spark.read.parquet(path).columns)
+        for c in df.columns:
+            if c not in existing:
+                df = df.withColumn(c, F.col(c).cast(evolved_type(c)))
     df.write.mode("append").partitionBy(PARTITION_COLUMN).parquet(path)
-    return spark.read.option("mergeSchema", True).parquet(path)
 
 
 def write_bucketed(
@@ -201,11 +200,12 @@ def merge_upsert(
     SURVEY.md §3).
 
     engine='auto' probes for Delta (`delta_available`) and issues a real
-    row-level MERGE INTO when present; otherwise (plain parquet — this
-    container) it falls back to a partition-overwrite MERGE: only
-    partitions present in `updates` are rewritten (updates win over
-    existing rows on the key). engine='delta' forces the Delta path and
-    raises if the session can't do it; engine='parquet' forces the
+    row-level MERGE INTO when present; otherwise (plain parquet) it
+    falls back to a partition-overwrite MERGE: only partitions present
+    in `updates` are rewritten (updates win over existing rows on the
+    key), through `overwrite_partitions`, whatever the session's
+    partition-overwrite default. engine='delta' forces the Delta path
+    and raises if the session can't do it; engine='parquet' forces the
     fallback.
     """
     if engine not in ("auto", "delta", "parquet"):
@@ -243,33 +243,14 @@ def merge_upsert(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_is_update")
         )
-        # the conf must land on the session that EXECUTES the write —
-        # under streaming foreachBatch `winners` descends from the
-        # micro-batch session CLONE, whose conf snapshot (not the outer
-        # session's) governs the insert. Setting the outer session and
-        # restoring it turned the second stream's merges into static
-        # overwrites (the r13 code only worked because it leaked
-        # `dynamic` onto the outer session for the next stream to clone).
-        sess = winners.sparkSession
-        prev_mode = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # one narrow shuffle puts each date partition in exactly one
-            # task -> ONE file per rewritten partition instead of one
-            # per (window task, partition) pair (r14, guide §6: the
-            # window's 32 tasks each wrote into every touched date dir —
-            # ~30x the files, which every later merge re-lists and
-            # re-reads; same one-file-per-partition discipline as the
-            # pq bucket writers, same documented skew valve)
-            winners.repartition(F.col(PARTITION_COLUMN)).write.mode(
-                "overwrite"
-            ).partitionBy(PARTITION_COLUMN).parquet(path)
-        finally:
-            sess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
+        # one narrow shuffle puts each date partition in exactly one
+        # task -> ONE file per rewritten partition instead of one per
+        # (window task, partition) pair (r14, guide §6: the window's 32
+        # tasks each wrote into every touched date dir — ~30x the files,
+        # which every later merge re-lists and re-reads; same
+        # one-file-per-partition discipline as the pq bucket writers,
+        # same documented skew valve)
+        overwrite_partitions(winners.repartition(F.col(PARTITION_COLUMN)), path)
         return spark.read.parquet(path)
     finally:
         updates.unpersist()
@@ -287,14 +268,15 @@ def overwrite_partitions(
     re-run of one day rewrites one directory, idempotently, with no
     full-table scan — at 100 TB the difference between O(day) and
     O(table) I/O.
+
+    The engine's one dynamic-overwrite write. The mode is stated on the
+    writer, which wins over the session's partition-overwrite conf in
+    either direction, so the write never reads or changes shared session
+    state: concurrent writers on one session cannot turn each other's
+    write static. A `df` with no rows rewrites no partition.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(partition_col).parquet(path)
 
 
 def compact_partition(
@@ -473,16 +455,9 @@ def scd2_apply(
         out = to_close.drop("_fp").withColumn(
             "state", F.lit("closed")
         ).unionByName(new_current.withColumn("state", F.lit("current")))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("state", "valid_to").parquet(
-                path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("state", "valid_to").parquet(path)
     finally:
         joined.unpersist()
     return spark.read.parquet(path).filter(F.col("state") == "current").drop(

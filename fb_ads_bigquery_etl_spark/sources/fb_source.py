@@ -92,14 +92,6 @@ class CredentialProvider:
         raise NotImplementedError
 
 
-class StaticToken(CredentialProvider):
-    def __init__(self, token: str = "TEST_TOKEN"):
-        self._token = token
-
-    def get_token(self) -> str:
-        return self._token
-
-
 class SecretStore:
     """Pluggable secret backend (reference: GCP Secret Manager,
     main.py:71-90). Tests use the in-memory fake; a real deployment

@@ -1,28 +1,9 @@
-"""Fixture source: raw FB-API-shaped records -> nested DataFrame.
-
-Gives tests (and the golden pipeline) the same nested shape the paginated
-API source produces (FIXTURES.md §1), without network access.
+"""Fixture records: raw FB-API-shaped rows (RAW_INSIGHTS_SCHEMA's
+nested shape, the one the paginated API source produces, FIXTURES.md §1),
+without network access.
 """
 
 from __future__ import annotations
-
-import json
-from collections.abc import Iterable
-
-from pyspark.sql import DataFrame, SparkSession
-
-from fb_ads_bigquery_etl_spark.schema import RAW_INSIGHTS_SCHEMA
-
-
-def raw_insights_df(spark: SparkSession, records: Iterable[dict]) -> DataFrame:
-    """list-of-dicts (API response shape) -> DataFrame[RAW_INSIGHTS_SCHEMA].
-
-    Goes through the JSON reader so missing keys / nested arrays behave
-    exactly like real API payloads (absent key -> NULL column).
-    """
-    rdd = spark.sparkContext.parallelize([json.dumps(r) for r in records])
-    return spark.read.schema(RAW_INSIGHTS_SCHEMA).json(rdd)
-
 
 # Canonical fixture set covering FIXTURES.md §1's required edge cases.
 SAMPLE_RECORDS: list[dict] = [

@@ -15,7 +15,7 @@ the stream side is just the file log — no row-level state store.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.operators.dedup import dedup_any
@@ -103,11 +103,12 @@ def stream_ivf_ingest(
     appends touch only the buckets the batch routes to; centroids
     retrain offline (train_centroids_exact) on their own cadence.
     """
+    from fb_ads_bigquery_etl_spark.operators.pq import _centroid_df
     from fb_ads_bigquery_etl_spark.operators.similarity import (
         assign_ivf_buckets,
     )
 
-    centroids = spark.read.parquet(f"{index_path}_centroids")
+    centroids = _centroid_df(spark, index_path)
 
     def _transform(batch_df):
         _, assigned = assign_ivf_buckets(
@@ -162,6 +163,7 @@ def stream_ivfpq_ingest(
     re-draining history."""
     from fb_ads_bigquery_etl_spark.operators.pq import (
         _centroid_df,
+        _refuse_tombstoned,
         _residuals,
         encode_ints,
         load_codebooks,
@@ -171,30 +173,8 @@ def stream_ivfpq_ingest(
     cb = load_codebooks(spark, index_path)
 
     def _transform(batch_df):
-        from fb_ads_bigquery_etl_spark.operators.pq import (
-            _read_tombstones,
-        )
-
-        tomb = _read_tombstones(spark, index_path)
-        if tomb is not None:
-            # same re-add guard as append_ivfpq_index: a tombstoned id
-            # cannot re-enter before compaction (the sequence-free
-            # sidecar would hide the new row). One O(batch)-sided
-            # semi-join per micro-batch, only while deletes are pending.
-            clash = (
-                batch_df.select(
-                    F.col(id_col).cast("long").alias("id")
-                )
-                .join(tomb, "id", "left_semi")
-                .limit(5)
-                .collect()
-            )
-            if clash:
-                raise ValueError(
-                    f"ids {sorted(r['id'] for r in clash)} (first 5) "
-                    "are tombstoned; compact_ivfpq_index before "
-                    "re-ingesting them"
-                )
+        # the re-add guard append_ivfpq_index runs, per micro-batch
+        _refuse_tombstoned(spark, index_path, batch_df, id_col)
         _, resid = _residuals(
             batch_df, centroids, vec_col=vec_col, id_col=id_col
         )
@@ -287,10 +267,11 @@ def _publish_bucket_batch(
     try:
         pre = _bucket_stats(frame)
         # one file per touched bucket per batch (see
-        # pq.append_ivfpq_index)
-        frame.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(stage)
+        # pq.append_ivfpq_index); STATIC, so a retry's stage holds no
+        # bucket left over from a crashed attempt
+        frame.repartition("bucket").write.mode("overwrite").option(
+            "partitionOverwriteMode", "static"
+        ).partitionBy("bucket").parquet(stage)
     finally:
         frame.unpersist()
     st = storage.resolve(frame.sparkSession, index_path)

@@ -95,20 +95,6 @@ def session_aggregate(
     )
 
 
-def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drain a stream to completion with Trigger.AvailableNow into a
-    memory sink and return the result as a DataFrame (test/backfill use)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
-
-
 def streaming_dedup(
     df: DataFrame,
     keys: list[str] | tuple[str, ...] = ("event_id",),

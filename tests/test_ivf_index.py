@@ -1387,7 +1387,9 @@ def test_ivfpq_maintenance_verbs_raise_on_missing_centroid_sidecar(
 ):
     """Append, codebook retrain and streaming ingest read the centroid
     sidecar through `storage` too, so a missing sidecar fails them as it
-    fails every probe: FileNotFoundError, before anything is written."""
+    fails every probe: FileNotFoundError, before anything is written.
+    The same holds for the raw-vector IVF index's append, probe and
+    streaming ingest, which share the sidecar format."""
     import os
     import shutil
 
@@ -1399,6 +1401,7 @@ def test_ivfpq_maintenance_verbs_raise_on_missing_centroid_sidecar(
         retrain_ivfpq_codebooks,
     )
     from fb_ads_bigquery_etl_spark.streaming.ingest import (
+        stream_ivf_ingest,
         stream_ivfpq_ingest,
     )
 
@@ -1423,6 +1426,14 @@ def test_ivfpq_maintenance_verbs_raise_on_missing_centroid_sidecar(
         retrain_ivfpq_codebooks(spark, emb, path)
     with pytest.raises(FileNotFoundError):
         stream_ivfpq_ingest(
+            spark, landing, path, checkpoint_path=str(tmp_path / "ckpt")
+        )
+    with pytest.raises(FileNotFoundError):
+        similarity.append_ivf_index(spark, delta, path)
+    with pytest.raises(FileNotFoundError):
+        similarity.query_ivf_index(spark, path, [0.0] * 64)
+    with pytest.raises(FileNotFoundError):
+        stream_ivf_ingest(
             spark, landing, path, checkpoint_path=str(tmp_path / "ckpt")
         )
     assert files() == before

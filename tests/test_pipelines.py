@@ -17,6 +17,7 @@ from fb_ads_bigquery_etl_spark.schema import DEDUP_KEY, RAW_INSIGHTS_SCHEMA
 from fb_ads_bigquery_etl_spark.sinks import (
     append_with_schema_evolution,
     read_csv_inferred,
+    read_table,
 )
 
 KEY = list(DEDUP_KEY)
@@ -156,7 +157,8 @@ def test_schema_evolution_typing_rule(spark, tmp_path):
     evolved_in = base.withColumn("brand_lift", F.lit("0.5"))
     # unknown columns evolve as DOUBLE (STRING only for the known name
     # list) — reference main.py:427-434
-    out = append_with_schema_evolution(spark, evolved_in, table)
+    append_with_schema_evolution(spark, evolved_in, table)
+    out = read_table(spark, table)
     types = dict(out.dtypes)
     assert types["brand_lift"] == "double"
     # old rows read as NULL for the evolved column (mergeSchema union)
