@@ -3049,9 +3049,11 @@ def q_merge_upsert_state(spark, sf_dir):
     try:
         path = os.path.join(tmp, "t")
         merge_upsert(spark, base, path, key=("k",))
-        final = merge_upsert(spark, upd, path, key=("k",))
-        out = final.select("k", "date_start", "amount_cents").localCheckpoint(
-            eager=True
+        merge_upsert(spark, upd, path, key=("k",))
+        out = (
+            spark.read.parquet(path)
+            .select("k", "date_start", "amount_cents")
+            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

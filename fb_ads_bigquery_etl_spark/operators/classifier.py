@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from fb_ads_bigquery_etl_spark.functions.portable import hash32, tokens
-from fb_ads_bigquery_etl_spark.session import coalesce_by_bytes, local_df
+from fb_ads_bigquery_etl_spark.session import local_df
 
 
 def hashed_text_features(text: Column, *, include_bigrams: bool = True) -> Column:
@@ -191,7 +191,10 @@ def train_classifier(
     the mistake count riding the same aggregation (sum of one
     first-row flag per mistake doc) — per-iteration driver traffic is
     vocab-sized (the kmeans partial-sum discipline; weights are the
-    in-memory fastText-style vector between iterations).
+    in-memory fastText-style vector between iterations). AQE sizes
+    that vocab-sized reduce by its bytes (one task while it shuffles
+    less than `minPartitionSize`); `num_partitions` sizes the
+    persisted feature frame.
 
     Featureless docs (empty/whitespace text) always score 0, so they
     are mistakes EVERY iteration (y * 0 <= 0); they contribute nothing
@@ -279,8 +282,8 @@ def train_classifier(
     # checkpoint, nothing computed twice): every row of a mistake doc
     # carries the doc's score, the doc-level mistake flag is a row
     # filter, the bucket-keyed update reduce is the only shuffle
-    # (vocab-bounded, coalesced by bytes), and the mistake COUNT rides
-    # the same aggregation as sum(_rn == 1) — one row per mistake doc.
+    # (vocab-bounded), and the mistake COUNT rides the same
+    # aggregation as sum(_rn == 1) — one row per mistake doc.
     # Featureless docs never enter `feats`; they are permanent mistakes
     # (score 0) adding the SAME constant to every iteration's count, so
     # the pocket argmin is unchanged by counting them at the end only
@@ -292,69 +295,65 @@ def train_classifier(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     try:
-        # every reduce stage in this loop is bounded by vocab/doc-sample
-        # cardinality, so coalesce its shuffles by bytes, not core count
-        # (session.coalesce_by_bytes; scoped — restored on exit)
-        with coalesce_by_bytes(spark):
-            w: dict[int, int] = {}
-            pocket: dict[int, int] = {}
-            acc: dict[int, int] = {}  # averaged: sum of w_1..w_iters
-            pocket_mistakes = None  # featured-doc mistakes only (see above)
-            n_feat_docs = 0
-            for it in range(iters):
-                if w:
-                    # vocab-sized weight table as a local relation
-                    # (session.local_df): its broadcast build runs no
-                    # Python worker, every iteration
-                    wdf = local_df(
-                        spark, sorted(w.items()), "bucket long, w long"
-                    )
-                    base = feats.join(
-                        F.broadcast(wdf),
-                        feats["_bucket"] == wdf["bucket"],
-                        "left",
-                    )
-                    contrib = F.col("_c") * F.coalesce(
-                        F.col("w"), F.lit(0)
-                    )
-                else:
-                    # w0 = 0: every doc scores 0 and is a mistake
-                    base = feats
-                    contrib = F.lit(0)
-                scored = base.select(
-                    "_y",
-                    "_bucket",
-                    "_c",
-                    F.sum(contrib).over(wfull).cast("long").alias("_s"),
-                    F.row_number().over(wspec).alias("_rn"),
+        w: dict[int, int] = {}
+        pocket: dict[int, int] = {}
+        acc: dict[int, int] = {}  # averaged: sum of w_1..w_iters
+        pocket_mistakes = None  # featured-doc mistakes only (see above)
+        n_feat_docs = 0
+        for it in range(iters):
+            if w:
+                # vocab-sized weight table as a local relation
+                # (session.local_df): its broadcast build runs no
+                # Python worker, every iteration
+                wdf = local_df(
+                    spark, sorted(w.items()), "bucket long, w long"
                 )
-                upd = (
-                    scored.filter(F.col("_y") * F.col("_s") <= 0)
-                    .groupBy("_bucket")
-                    .agg(
-                        # _m = _y for every row of a mistake doc
-                        F.sum(F.col("_c") * F.col("_y"))
-                        .cast("long")
-                        .alias("_u"),
-                        F.sum(
-                            F.when(F.col("_rn") == 1, 1).otherwise(0)
-                        )
-                        .cast("long")
-                        .alias("_nd"),
-                    )
+                base = feats.join(
+                    F.broadcast(wdf),
+                    feats["_bucket"] == wdf["bucket"],
+                    "left",
                 )
-                w_prev = dict(w)
-                n_mis = 0
-                for r in upd.collect():
-                    n_mis += r["_nd"]
-                    w[r["_bucket"]] = w.get(r["_bucket"], 0) + r["_u"]
-                if it == 0:
-                    n_feat_docs = n_mis
-                if pocket_mistakes is None or n_mis < pocket_mistakes:
-                    pocket_mistakes, pocket = n_mis, dict(w_prev)
-                if variant in ("averaged", "both"):
-                    for b, v in w.items():
-                        acc[b] = acc.get(b, 0) + v
+                contrib = F.col("_c") * F.coalesce(
+                    F.col("w"), F.lit(0)
+                )
+            else:
+                # w0 = 0: every doc scores 0 and is a mistake
+                base = feats
+                contrib = F.lit(0)
+            scored = base.select(
+                "_y",
+                "_bucket",
+                "_c",
+                F.sum(contrib).over(wfull).cast("long").alias("_s"),
+                F.row_number().over(wspec).alias("_rn"),
+            )
+            upd = (
+                scored.filter(F.col("_y") * F.col("_s") <= 0)
+                .groupBy("_bucket")
+                .agg(
+                    # _m = _y for every row of a mistake doc
+                    F.sum(F.col("_c") * F.col("_y"))
+                    .cast("long")
+                    .alias("_u"),
+                    F.sum(
+                        F.when(F.col("_rn") == 1, 1).otherwise(0)
+                    )
+                    .cast("long")
+                    .alias("_nd"),
+                )
+            )
+            w_prev = dict(w)
+            n_mis = 0
+            for r in upd.collect():
+                n_mis += r["_nd"]
+                w[r["_bucket"]] = w.get(r["_bucket"], 0) + r["_u"]
+            if it == 0:
+                n_feat_docs = n_mis
+            if pocket_mistakes is None or n_mis < pocket_mistakes:
+                pocket_mistakes, pocket = n_mis, dict(w_prev)
+            if variant in ("averaged", "both"):
+                for b, v in w.items():
+                    acc[b] = acc.get(b, 0) + v
         # featureless docs (empty/whitespace text): permanent mistakes,
         # zero update contribution — added once here so the RETURNED
         # count matches a replay that scores every input doc

@@ -257,22 +257,17 @@ def kmeans_quantized_train(
             for r in first
         ]
     dim = len(centroids[0])
-    from fb_ads_bigquery_etl_spark.session import coalesce_by_bytes
-
     for _ in range(iters):
-        # the reduce side is k*dim partial-sum rows — metadata-sized by
-        # construction, so coalesce the shuffle by bytes, not core count
-        with coalesce_by_bytes(df.sparkSession):
-            parts = (
-                df.select(vec_col)
-                .mapInPandas(
-                    _quantized_assign_partials(vec_col, centroids),
-                    schema="cluster int, dim int, s long, n long",
-                )
-                .groupBy("cluster", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
+        parts = (
+            df.select(vec_col)
+            .mapInPandas(
+                _quantized_assign_partials(vec_col, centroids),
+                schema="cluster int, dim int, s long, n long",
             )
+            .groupBy("cluster", "dim")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
         sums: dict[int, list[int]] = {}
         counts: dict[int, int] = {}
         for r in parts:

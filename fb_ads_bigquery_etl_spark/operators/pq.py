@@ -34,10 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from fb_ads_bigquery_etl_spark import storage
-from fb_ads_bigquery_etl_spark.session import (
-    coalesce_metadata_stages,
-    local_df,
-)
+from fb_ads_bigquery_etl_spark.session import local_df
 from fb_ads_bigquery_etl_spark.sinks import overwrite_partitions
 
 PQ_SCALE = 1_000_000
@@ -160,21 +157,16 @@ def train_codebooks_ints(
                  "s": out_s, "n": out_n}
             )
 
-    from fb_ads_bigquery_etl_spark.session import coalesce_by_bytes
-
-    # reduce side is m*ksub*sub partial-sum rows — metadata-bounded,
-    # so coalesce the shuffle by bytes, not core count
-    with coalesce_by_bytes(df.sparkSession):
-        parts = (
-            df.select(int_col)
-            .mapInPandas(
-                _partials,
-                schema="m int, cluster int, dim int, s long, n long",
-            )
-            .groupBy("m", "cluster", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
+    parts = (
+        df.select(int_col)
+        .mapInPandas(
+            _partials,
+            schema="m int, cluster int, dim int, s long, n long",
         )
+        .groupBy("m", "cluster", "dim")
+        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+        .collect()
+    )
     new_cb = [[list(cw) for cw in cb_m] for cb_m in cb]  # default: seeds
     sums: dict[tuple[int, int], list[int]] = {}
     counts: dict[tuple[int, int], int] = {}
@@ -637,7 +629,6 @@ def load_codebooks(spark, path: str) -> list[list[list[int]]]:
     return cb  # type: ignore[return-value]
 
 
-@coalesce_metadata_stages
 def build_ivfpq_index(
     df: DataFrame,
     path: str,
@@ -736,7 +727,6 @@ def build_ivfpq_index(
     refresh_ivfpq_manifest(spark, path, precomputed=pre, reset=True)
 
 
-@coalesce_metadata_stages
 def append_ivfpq_index(
     spark,
     delta: DataFrame,
@@ -782,7 +772,6 @@ def append_ivfpq_index(
     refresh_ivfpq_manifest(spark, path, precomputed=pre)
 
 
-@coalesce_metadata_stages
 def retrain_ivfpq_codebooks(
     spark,
     df: DataFrame,
@@ -921,7 +910,6 @@ def recover_ivfpq_split(spark, path: str) -> bool:
     return _replay_split_commit(spark, path) is not None
 
 
-@coalesce_metadata_stages
 def split_ivfpq_bucket(
     spark,
     src: DataFrame,
@@ -1165,7 +1153,6 @@ def _reassign_and_publish(
     return touched, n_moved
 
 
-@coalesce_metadata_stages
 def merge_ivfpq_buckets(
     spark,
     src: DataFrame,
@@ -1408,7 +1395,6 @@ def _scan_code_file_stats(spark, path: str, files: list[str]) -> dict:
     return out
 
 
-@coalesce_metadata_stages
 def refresh_ivfpq_manifest(
     spark,
     path: str,
@@ -1520,7 +1506,6 @@ def refresh_ivfpq_manifest(
     return local_df(spark, out_rows, _MANIFEST_SCHEMA)
 
 
-@coalesce_metadata_stages
 def compact_ivfpq_manifest(
     spark, path: str, *, max_segments: int = 8
 ) -> int:
@@ -1642,7 +1627,6 @@ def _refuse_pending_tombstones(spark, path: str, verb: str) -> None:
         )
 
 
-@coalesce_metadata_stages
 def delete_from_ivfpq_index(
     spark,
     ids: DataFrame,
@@ -1666,7 +1650,6 @@ def delete_from_ivfpq_index(
     ).parquet(f"{path}_tombstones")
 
 
-@coalesce_metadata_stages
 def compact_ivfpq_index(
     spark, path: str, *, use_manifest: bool | None = None
 ) -> list[int]:

@@ -9,7 +9,7 @@ text sweep (the scan is the whole job).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from fb_ads_bigquery_etl_spark.functions.portable import (
     tokens,

@@ -2,13 +2,15 @@
 
 Local testing runs on local[N]; the same config block is what we would
 ship on a 1000-executor cluster (AQE on, skew-join handling on,
-partition coalescing on) — only sizes change.
+partition coalescing on) — only sizes change. No operator changes
+session conf around an action: AQE's coalescing already runs a shuffle
+under `coalescePartitions.minPartitionSize` (nlist-, vocab- or
+k-sized partials) in one task.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -35,70 +37,6 @@ def local_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(
         storage.arrow_table(rows, schema), storage.spark_schema(schema)
     )
-
-
-def coalesce_metadata_stages(fn):
-    """Decorator form of `coalesce_by_bytes` for operator entry points
-    whose eager actions all reduce to metadata-bounded stages (nlist /
-    vocab / k-centroid cardinality). The first positional argument must
-    be a SparkSession or carry `.sparkSession` (a DataFrame)."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        first = args[0]
-        spark = getattr(first, "sparkSession", None) or first
-        with coalesce_by_bytes(spark):
-            return fn(*args, **kwargs)
-
-    return wrapper
-
-
-# coalesce_by_bytes nesting state, keyed per SparkSession: overlapping
-# scopes (nested calls, or independent driver threads overlapping their
-# jobs per guide §2.6) must not restore a stale value — only the
-# OUTERMOST exit restores the session default. The conf itself is still
-# session-global SQL conf: any unrelated query running concurrently
-# inside someone's scope is also coalesced by bytes; acceptable here
-# because every deliberate overlap in this engine runs metadata-bounded
-# stages on both sides (classifier chains, sidecar writes).
-_CBB_LOCK = __import__("threading").RLock()
-_CBB_DEPTH: dict[int, int] = {}
-_CBB_PREV: dict[int, str] = {}
-
-
-@contextmanager
-def coalesce_by_bytes(spark: SparkSession):
-    """Scope AQE partition coalescing to advisory BYTES (instead of the
-    core-count floor) for operators whose reduce stages are
-    METADATA-BOUNDED BY CONSTRUCTION — nlist buckets, vocab buckets,
-    k centroids, per-file manifest rows. For those stages the Spark
-    default (parallelismFirst=true) schedules core-count reduce tasks
-    for a handful of groups at ANY cluster size; honoring the advisory
-    size collapses them to the few tasks the data warrants. Kept
-    SCOPED because the same flag session-wide serializes CPU-heavy
-    byte-light stages (pair-verification joins measured x1.8-2.9
-    slower — OPTIMIZATION_r13.md). Restores the previous value;
-    REENTRANT and overlap-safe via a per-session depth counter (r13
-    ADVICE: overlapping scopes used to restore a stale value)."""
-    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    sid = id(spark)
-    with _CBB_LOCK:
-        if _CBB_DEPTH.get(sid, 0) == 0:
-            try:
-                _CBB_PREV[sid] = spark.conf.get(key)
-            except Exception:
-                _CBB_PREV[sid] = "true"
-            spark.conf.set(key, "false")
-        _CBB_DEPTH[sid] = _CBB_DEPTH.get(sid, 0) + 1
-    try:
-        yield
-    finally:
-        with _CBB_LOCK:
-            _CBB_DEPTH[sid] -= 1
-            if _CBB_DEPTH[sid] == 0:
-                spark.conf.set(key, _CBB_PREV.pop(sid))
-                del _CBB_DEPTH[sid]
 
 
 def get_spark(
@@ -128,13 +66,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at the Spark default (true): an
-        # isolated A/B (OPTIMIZATION_r13.md) measured that flipping it
-        # session-wide serializes CPU-heavy byte-light reduce stages
-        # (pair-verification joins went x1.8-2.9) while only the
-        # metadata-bounded stages win. Those get the scoped
-        # `coalesce_by_bytes` context below instead.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -195,9 +195,11 @@ def merge_upsert(
     path: str,
     key: tuple[str, ...] = DEDUP_KEY,
     engine: str = "auto",
-) -> DataFrame:
+) -> None:
     """Idempotent key-based MERGE (fixes EP3's duplicate-on-reload gap,
-    SURVEY.md §3).
+    SURVEY.md §3). Returns nothing: a caller that wants the merged
+    table reads it (`read_table`). An empty `updates` writes nothing,
+    and creates no table at a path that has none.
 
     engine='auto' probes for Delta (`delta_available`) and issues a real
     row-level MERGE INTO when present; otherwise (plain parquet) it
@@ -216,7 +218,8 @@ def merge_upsert(
             "and spark.sql.extensions=...DeltaSparkSessionExtension"
         )
     if engine == "delta" or (engine == "auto" and delta_available(spark)):
-        return merge_upsert_delta(spark, updates, path, key)
+        merge_upsert_delta(spark, updates, path, key)
+        return
     # Two actions consume `updates` (partition discovery + the MERGE
     # write): persist so the upstream pipeline executes once, not twice.
     updates = updates.persist()
@@ -225,7 +228,7 @@ def merge_upsert(
             r[0] for r in updates.select(PARTITION_COLUMN).distinct().collect()
         ]
         if not part_vals:
-            return spark.read.parquet(path)
+            return
         tagged = updates.withColumn("_is_update", F.lit(1))
         if path_exists(spark, path):
             existing = (
@@ -251,7 +254,6 @@ def merge_upsert(
         # one-file-per-partition discipline as the pq bucket writers,
         # same documented skew valve)
         overwrite_partitions(winners.repartition(F.col(PARTITION_COLUMN)), path)
-        return spark.read.parquet(path)
     finally:
         updates.unpersist()
 

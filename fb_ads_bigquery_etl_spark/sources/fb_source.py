@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass

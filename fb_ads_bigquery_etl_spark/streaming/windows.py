@@ -16,7 +16,7 @@ tumbling agg would retain every window forever.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # events.parquet carries ns-precision INT64 timestamps; streaming file
 # sources need an explicit schema. How `ts` surfaces depends on the

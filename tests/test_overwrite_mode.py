@@ -1,17 +1,21 @@
-"""Partition-overwrite mode is stated on each writer, never taken from
-(or set on) the shared session: full rebuilds pin STATIC, partition
-rewrites go through `sinks.overwrite_partitions` (DYNAMIC)."""
+"""No engine module saves, sets or restores session conf around an
+action. Partition-overwrite mode is stated on each writer, never taken
+from (or set on) the shared session: full rebuilds pin STATIC,
+partition rewrites go through `sinks.overwrite_partitions` (DYNAMIC).
+Metadata-sized reduces need no conf either: AQE already runs them in
+one task."""
 
 from __future__ import annotations
 
 import os
 import pathlib
 import re
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from fb_ads_bigquery_etl_spark.operators import ivm, similarity
+from fb_ads_bigquery_etl_spark.operators import ivm, pq, similarity
 from fb_ads_bigquery_etl_spark.operators.pq import build_ivfpq_index
 from fb_ads_bigquery_etl_spark.session import local_df
 
@@ -103,3 +107,55 @@ def test_no_module_reads_or_sets_the_session_overwrite_mode():
         if MODE in f.read_text() or conf_call.search(f.read_text())
     ]
     assert not offenders, offenders
+
+
+def test_no_module_flips_aqe_coalescing_around_an_action():
+    """Plain-text pin: no engine module scopes AQE partition coalescing
+    by flipping `parallelismFirst` on the shared session."""
+    banned = ("parallelismFirst", "coalesce_by_bytes", "coalesce_metadata_stages")
+    offenders = [
+        str(f.relative_to(PACKAGE))
+        for f in sorted(PACKAGE.rglob("*.py"))
+        if any(b in f.read_text() for b in banned)
+    ]
+    assert not offenders, offenders
+
+
+def _completed_tasks_per_stage(sc, group):
+    """{stage_id: completed tasks} of the stages that ran under `group`,
+    once every job in it has finished (the status tracker trails the
+    action by a listener-bus hop)."""
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status == "SUCCEEDED" for j in jobs):
+            stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+            if all(s is not None for s in stages):
+                return {s.stageId: s.numCompletedTasks for s in stages
+                        if s.numCompletedTasks}
+        assert time.monotonic() < deadline, "jobs did not finish in the tracker"
+        time.sleep(0.05)
+
+
+def test_aqe_runs_a_metadata_sized_reduce_in_one_task(spark):
+    """The premise that lets no operator set coalescing conf: on the
+    session defaults, AQE folds a shuffle smaller than
+    `coalescePartitions.minPartitionSize` (1 MB) into ONE reduce task,
+    even when its map side ran as several tasks. Checked on a
+    per-bucket reduce of a few hundred code rows."""
+    sc = spark.sparkContext
+    codes = spark.range(0, 300, 1, 4).select(
+        (F.col("id") % 7).cast("int").alias("bucket"), "id"
+    )
+    group = "test_aqe_runs_a_metadata_sized_reduce_in_one_task"
+    sc.setJobGroup(group, group)
+    try:
+        stats = pq._bucket_stats(codes)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats[0] == (43, 0, 294)
+    ran = _completed_tasks_per_stage(sc, group)
+    assert sorted(ran.values()) == [1, 4], ran  # 4 map tasks, 1 reduce task
+    assert ran[max(ran)] == 1, ran

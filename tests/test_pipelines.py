@@ -518,14 +518,38 @@ def test_merge_upsert_engine_dispatch(spark, tmp_path):
     path = str(tmp_path / "merge_tbl")
     sinks.merge_upsert(spark, df, path)  # auto -> parquet fallback
     updated = df.withColumn("spend", F.lit(2.0))
-    out = sinks.merge_upsert(spark, updated, path)
-    rows = out.collect()
+    sinks.merge_upsert(spark, updated, path)
+    rows = sinks.read_table(spark, path).collect()
     assert len(rows) == 1 and rows[0]["spend"] == 2.0  # updates win
 
     with pytest.raises(RuntimeError, match="delta"):
         sinks.merge_upsert(spark, df, path, engine="delta")
     with pytest.raises(ValueError):
         sinks.merge_upsert(spark, df, path, engine="iceberg")
+
+
+def test_merge_upsert_of_an_empty_batch_writes_nothing(spark, tmp_path):
+    """An empty batch is a no-op: into a missing path it creates no
+    table (and does not fail reading one), into an existing table it
+    leaves every row as it was."""
+    from fb_ads_bigquery_etl_spark import sinks
+
+    schema = (
+        "campaign_name string, ad_name string, date_start string, "
+        "publisher_platform string, spend double"
+    )
+    df = spark.createDataFrame([("c1", "a1", "2026-01-10", "facebook", 1.0)], schema)
+    empty = spark.createDataFrame([], schema)
+
+    missing = tmp_path / "never_written"
+    sinks.merge_upsert(spark, empty, str(missing))
+    assert not missing.exists()
+
+    path = str(tmp_path / "merge_tbl")
+    sinks.merge_upsert(spark, df, path)
+    before = sorted(sinks.read_table(spark, path).collect())
+    sinks.merge_upsert(spark, empty, path)
+    assert sorted(sinks.read_table(spark, path).collect()) == before
 
 
 def test_run_streaming_drains_and_is_exactly_once(spark, tmp_path):
