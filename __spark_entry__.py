@@ -4478,11 +4478,13 @@ def q_ivfpq_batch_query(spark, sf_dir):
     query collect BROADCASTS, the code scan partition-prunes to the
     UNION of all probed buckets and is read ONCE for the whole batch
     (vs once per query in a probe loop), ADC scores ride that single
-    scan, a per-query window keeps top k*expand, and the exact rerank
-    fetches only candidate ids. Row-for-row equal to a
-    query_ivfpq_index loop (pytest-pinned); the oracle replays the
-    full pipeline per query — training, encoding, probe, ADC,
-    rerank."""
+    scan, and a per-query window keeps top k*expand. The exact rerank
+    runs on the driver: the candidates are collected, only their
+    vectors are fetched through one pushed id filter, and each pair is
+    rescored in cosine_similarity's exact double order; the result is
+    a local relation. Row-for-row equal to a query_ivfpq_index loop
+    (pytest-pinned); the oracle replays the full pipeline per query —
+    training, encoding, probe, ADC, rerank."""
     import shutil
     import tempfile
 

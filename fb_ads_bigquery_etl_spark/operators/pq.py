@@ -31,7 +31,7 @@ No reference counterpart (north-star extension, BASELINE.json).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from fb_ads_bigquery_etl_spark import storage
 from fb_ads_bigquery_etl_spark.session import local_df
@@ -713,6 +713,11 @@ def build_ivfpq_index(
             codes.unpersist()
     finally:
         resid.unpersist()
+    # the rebuilt code table, from the caller's corpus, supersedes any
+    # pending delete: stale tombstones would hide a rebuilt id from
+    # every probe and refuse its re-append. Cleared only after the
+    # write, so a build that fails first leaves the old deletes in force
+    st.delete(f"{path}_tombstones")
     _write_centroid_sidecar(spark, cents, f"{path}_centroids")
     cb_rows = [
         (mm, c, [int(x) for x in cw])
@@ -1943,7 +1948,8 @@ def query_ivfpq_index(
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index with ONE query: the batch probe
     (query_ivfpq_index_batch) over a one-query batch. Returns
-    (id_col, score) top-k, ties to the lowest id."""
+    (id_col, score) top-k, ties to the lowest id, as a snapshot taken
+    at call time (a local relation; see query_ivfpq_index_batch)."""
     return _probe_batch(
         spark,
         path,
@@ -1977,29 +1983,28 @@ def query_ivfpq_index_batch(
     term1 + m table lookups per candidate — no vector math touches the
     corpus), the code scan partition-pruned to the UNION of all
     queries' probed buckets and read ONCE (each probed bucket's files
-    scan a single time however many queries probe it), a per-query
-    window keeping the top k*expand, and the exact float rerank
-    fetching only the candidate ids' full vectors from `rerank_src`.
-    Returns (query_id, id_col, score), top-k per query, ties to the
-    lowest id (the oracle replays the whole pipeline per query).
+    scan a single time however many queries probe it), and a
+    per-query window keeping the top k*expand candidates.
+
+    The exact rerank runs on the DRIVER: the Q*k*expand candidates are
+    metadata-sized, so they are collected, only their vectors are
+    fetched from `rerank_src` through ONE pushed `id IN (...)` filter
+    (parquet row groups prune on it), and each (query, candidate) pair
+    is rescored in `portable.cosine_similarity`'s exact double order
+    (see _rerank). Returns (query_id, id_col, score), top-k per query
+    ordered by (query_id, score desc, id), ties to the lowest id (the
+    oracle replays the whole pipeline per query). The result is a
+    SNAPSHOT taken at call time — a local relation whose collect runs
+    no Spark job — not a lazy plan over the index and `rerank_src`.
 
     At 100 TB this is the difference between an index that answers ONE
     query and one that serves a workload: LUT math is per-query
     metadata work, the corpus-sided cost is one pruned scan per BATCH.
     """
-    qrows = [
-        (int(r["qid"]), [float(x) for x in r["qv"]])
-        for r in queries.select(
-            F.col(id_col).alias("qid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                "qv"
-            ),
-        ).collect()
-    ]
     return _probe_batch(
         spark,
         path,
-        qrows,
+        _query_rows(queries, id_col, vec_col),
         k=k,
         nprobe=nprobe,
         expand=expand,
@@ -2009,12 +2014,23 @@ def query_ivfpq_index_batch(
     )
 
 
+def _query_rows(
+    queries: DataFrame, id_col: str, vec_col: str
+) -> list[tuple[int, list[float]]]:
+    """The batch's driver-side (qid, vector) rows. The raw array is
+    collected: `float` of each element is exactly Spark's cast to
+    double."""
+    return [
+        (int(qid), [float(x) for x in qv])
+        for qid, qv in queries.select(id_col, vec_col).collect()
+    ]
+
+
 def _ranked(reranked: DataFrame, k: int, id_col: str) -> DataFrame:
-    """The batch probes' result: the top `k` reranked rows per query,
-    ordered by (query_id, score desc, id). Those are Q*k rows, so ONE
-    task sorts them; a global orderBy would pay a sampling job and a
-    range shuffle to order them. (A query TABLE in the distributed
-    shape still ends in that one task: its result is Q*k rows too.)"""
+    """The distributed probe's result: the top `k` reranked rows per
+    query, ordered by (query_id, score desc, id). Those are Q*k rows,
+    so ONE task sorts them; a global orderBy would pay a sampling job
+    and a range shuffle to order them."""
     rank = (F.col("score").desc(), F.col(id_col).asc())
     return (
         _top_k(reranked, "query_id", k, *rank)
@@ -2023,7 +2039,7 @@ def _ranked(reranked: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-def _probe_batch(
+def _probe_candidates(
     spark,
     path: str,
     qrows: list[tuple[int, list[float]]],
@@ -2031,16 +2047,12 @@ def _probe_batch(
     k: int,
     nprobe: int,
     expand: int,
-    rerank_src: DataFrame,
-    vec_col: str,
-    id_col: str,
 ) -> DataFrame:
-    """query_ivfpq_index_batch over driver-side (qid, vector) rows."""
+    """The batch probe's ADC candidate plan over driver-side (qid,
+    vector) rows: (query_id, id), the top k*expand codes per query by
+    (adc_score desc, id), from one partition-pruned, tombstone
+    anti-joined code scan."""
     import math
-
-    from fb_ads_bigquery_etl_spark.functions.portable import (
-        cosine_similarity,
-    )
 
     cents = _read_centroids(spark, path)
     cb = load_codebooks(spark, path)
@@ -2071,23 +2083,135 @@ def _probe_batch(
         F.col("id"),
         (F.col("term1") + _adc()).alias("adc_score"),
     )
-    cand = _top_k(
+    return _top_k(
         scored, "query_id", k * expand,
         F.col("adc_score").desc(), F.col("id").asc(),
     ).select("query_id", "id")
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qvecs = local_df(spark, qrows, "query_id long, _qv array<double>")
-    reranked = (
-        rerank_src.select(F.col(id_col).alias("id"), vec_d.alias("_cv"))
-        .join(F.broadcast(cand), "id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            F.col("id").alias(id_col),
-            cosine_similarity(F.col("_cv"), F.col("_qv")).alias("score"),
-        )
+
+
+def _vectors_of(
+    rerank_src: DataFrame, ids: list[int], id_col: str, vec_col: str
+) -> DataFrame:
+    """`rerank_src`'s (id, vec) rows for `ids`, filtered by ONE SQL
+    `IN` literal: it lands in the scan's DataFilters (an INSET past
+    ten ids), so parquet row groups prune on it, and it costs one
+    py4j round trip — `Column.isin(list)` and `F.lit(list)` cost one
+    per element."""
+    cond = f"id IN ({', '.join(str(int(i)) for i in ids)})" if ids else "false"
+    return rerank_src.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+    ).filter(cond)
+
+
+def _seq_dot(a, b):
+    """Row-wise dot products of two (n, L) float64 arrays accumulated
+    one dimension at a time, left to right from 0.0 — the exact order
+    of `portable.dot_product`'s `aggregate`. (`np.dot`, `@` and
+    `np.sum` add in pairwise or BLAS order and differ in the last
+    bits.)"""
+    import numpy as np
+
+    acc = np.zeros(a.shape[0])
+    for j in range(a.shape[1]):
+        acc = acc + a[:, j] * b[:, j]
+    return acc
+
+
+def _rerank(spark, pairs: list[tuple[list[float], list | None]]) -> list:
+    """`portable.cosine_similarity(cv, qv)` of each (qv, cv) pair, as
+    Spark evaluates it on the raw `cv` cast to double (numpy's float64
+    conversion of each element is that cast): a null vector, a null
+    element or a length mismatch gives None (zip_with pads the shorter
+    array with nulls, and a null propagates through the sum); a zero
+    denominator raises under `spark.sql.ansi.enabled`, as Spark's
+    Divide does, and gives None otherwise."""
+    import numpy as np
+
+    scores: list = [None] * len(pairs)
+    by_len: dict[int, list[int]] = {}
+    for n, (qv, cv) in enumerate(pairs):
+        if cv is not None and len(cv) == len(qv) and None not in cv:
+            by_len.setdefault(len(qv), []).append(n)
+    for dim, idx in by_len.items():
+        q = np.array([pairs[n][0] for n in idx], dtype=np.float64)
+        c = np.array([pairs[n][1] for n in idx], dtype=np.float64)
+        q, c = q.reshape(len(idx), dim), c.reshape(len(idx), dim)
+        with np.errstate(all="ignore"):  # IEEE inf/NaN, as the JVM's
+            den = np.sqrt(_seq_dot(c, c)) * np.sqrt(_seq_dot(q, q))
+            cos = _seq_dot(c, q) / den
+        zero = den == 0.0
+        if zero.any() and (
+            spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
+        ):
+            from pyspark.errors import ArithmeticException
+
+            raise ArithmeticException(
+                message="[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
+                "vector in the IVF-PQ rerank"
+            )
+        for n, z, s in zip(idx, zero.tolist(), cos.tolist()):
+            if not z:
+                scores[n] = s
+    return scores
+
+
+def _rank_key(row):
+    """Spark's (score desc, id asc) row order: NaN sorts above every
+    number, null after every number."""
+    _, i, s = row
+    if s is None:
+        return (2, 0.0, i)
+    return (0, 0.0, i) if s != s else (1, -s, i)
+
+
+def _probe_batch(
+    spark,
+    path: str,
+    qrows: list[tuple[int, list[float]]],
+    *,
+    k: int,
+    nprobe: int,
+    expand: int,
+    rerank_src: DataFrame,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """query_ivfpq_index_batch over driver-side (qid, vector) rows.
+    The rerank mirrors the inner join it replaces: one row per
+    `rerank_src` row carrying a candidate id (none for a missing id),
+    and per query row carrying the candidate's query id."""
+    cand = _probe_candidates(
+        spark, path, qrows, k=k, nprobe=nprobe, expand=expand
+    ).collect()
+    fetch = _vectors_of(
+        rerank_src, sorted({i for _, i in cand}), id_col, vec_col
     )
-    return _ranked(reranked, k, id_col)
+    vecs: dict = {}
+    for i, v in fetch.collect():
+        vecs.setdefault(i, []).append(v)
+    qvs: dict[int, list] = {}
+    for qid, qv in qrows:
+        qvs.setdefault(qid, []).append(qv)
+    keys, pairs = [], []
+    for qid, i in cand:
+        for qv in qvs[qid]:
+            for cv in vecs.get(i, ()):
+                keys.append((qid, i))
+                pairs.append((qv, cv))
+    per_query: dict[int, list] = {}
+    for (qid, i), s in zip(keys, _rerank(spark, pairs)):
+        per_query.setdefault(qid, []).append((qid, i, s))
+    out = [
+        row
+        for qid in sorted(per_query)
+        for row in sorted(per_query[qid], key=_rank_key)[:k]
+    ]
+    schema = T.StructType([
+        T.StructField("query_id", T.LongType()),
+        T.StructField(id_col, fetch.schema["id"].dataType),
+        T.StructField("score", T.DoubleType()),
+    ])
+    return local_df(spark, out, schema)
 
 
 # the distributed probe's scoring join spreads each bucket over this
@@ -2127,9 +2251,13 @@ def query_ivfpq_index_batch_distributed(
     selection is a TWO-PHASE hash-agg top-(k*expand)
     (topk_per_group_structs — no window over query_id, so one giant
     query cannot serialize a task over ~nprobe/nlist of the corpus);
-    the final exact rerank window ranks at most k*expand survivors
-    per query. Row-for-row equal to the collect-based batch path
-    (pytest-pinned; the oracle replays the full pipeline per query).
+    the exact rerank stays distributed (a query table's candidates
+    are not metadata-sized), a join against `rerank_src` scored with
+    `portable.cosine_similarity` whose final window ranks at most
+    k*expand survivors per query. Row-for-row equal to the
+    collect-based batch path, whose rerank runs on the driver, so the
+    pytest pin cross-checks the two rerank implementations (the
+    oracle replays the full pipeline per query).
 
     Probe scoring uses the STORED cnorm column (dot / (cnorm *
     l2(q))), the same float expression the collect-based probe

@@ -483,12 +483,14 @@ def test_ivfpq_index_probe_is_partition_pruned_and_matches_rebuild(
 ):
     """The persisted IVF-PQ probe must (a) push its bucket filter into
     PartitionFilters (directory pruning — only probed buckets' code
-    files are even listed), and (b) return the same reranked top-k as
-    re-running the probe against a freshly rebuilt index (same trained
-    centroids -> same codes)."""
+    files are even listed; the code scan lives in the candidate plan,
+    since the returned top-k is a driver-side snapshot), and (b)
+    return the same reranked top-k as re-running the probe against a
+    freshly rebuilt index (same trained centroids -> same codes)."""
     from pyspark.sql import functions as F
 
     from fb_ads_bigquery_etl_spark.operators.pq import (
+        _probe_candidates,
         build_ivfpq_index,
         query_ivfpq_index,
     )
@@ -504,7 +506,12 @@ def test_ivfpq_index_probe_is_partition_pruned_and_matches_rebuild(
     out = query_ivfpq_index(
         spark, path, qvec, k=10, nprobe=2, expand=10, rerank_src=emb
     )
-    plan = PI.explain_str(out)
+    plan = PI.explain_str(
+        _probe_candidates(
+            spark, path, [(0, [float(x) for x in qvec])],
+            k=10, nprobe=2, expand=10,
+        )
+    )
     assert "PartitionFilters" in plan and "bucket" in plan, plan
     got = [tuple(r) for r in out.collect()]
     assert len(got) == 10
@@ -601,10 +608,13 @@ def test_ivfpq_append_is_append_only_and_matches_rebuild(spark, tmp_path, store)
 def test_ivfpq_batch_query_equals_per_query_loop(spark, tmp_path):
     """query_ivfpq_index_batch must return row-for-row what a
     query_ivfpq_index loop returns for the same queries, while its one
-    code scan partition-prunes to the union of probed buckets."""
+    code scan (in the candidate plan) partition-prunes to the union of
+    probed buckets."""
     from pyspark.sql import functions as F
 
     from fb_ads_bigquery_etl_spark.operators.pq import (
+        _probe_candidates,
+        _query_rows,
         build_ivfpq_index,
         query_ivfpq_index,
         query_ivfpq_index_batch,
@@ -621,7 +631,12 @@ def test_ivfpq_batch_query_equals_per_query_loop(spark, tmp_path):
     out = query_ivfpq_index_batch(
         spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb
     )
-    plan = PI.explain_str(out)
+    plan = PI.explain_str(
+        _probe_candidates(
+            spark, path, _query_rows(qs, "vec_id", "embedding"),
+            k=10, nprobe=2, expand=10,
+        )
+    )
     assert "PartitionFilters" in plan and "bucket" in plan, plan
     got = [tuple(r) for r in out.collect()]
 
@@ -2204,3 +2219,239 @@ def test_ivfpq_bucket_merge_exact_scoped_and_degenerate(spark, tmp_path):
     assert (
         shrunk3.filter(F.col("centroid_id").isin(hot2)).count() == 0
     )
+
+
+def _spark_rerank_rows(spark, path, qrows, rerank_src, *, k, nprobe, expand):
+    """The Spark reference for the serving probe's driver rerank: the
+    candidate frame joined to `rerank_src` and to the query vectors,
+    scored with `portable.cosine_similarity`, top k per query."""
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.functions.portable import cosine_similarity
+    from fb_ads_bigquery_etl_spark.operators.pq import _probe_candidates, _ranked
+
+    cand = _probe_candidates(spark, path, qrows, k=k, nprobe=nprobe, expand=expand)
+    qvecs = spark.createDataFrame(qrows, "query_id long, _qv array<double>")
+    reranked = (
+        rerank_src.select(
+            F.col("vec_id").alias("id"),
+            F.transform("embedding", lambda x: x.cast("double")).alias("_cv"),
+        )
+        .join(F.broadcast(cand), "id")
+        .join(F.broadcast(qvecs), "query_id")
+        .select(
+            "query_id",
+            F.col("id").alias("vec_id"),
+            cosine_similarity(F.col("_cv"), F.col("_qv")).alias("score"),
+        )
+    )
+    return _ranked(reranked, k, "vec_id")
+
+
+def _bits(rows):
+    return [(q, i, None if s is None else s.hex()) for q, i, s in rows]
+
+
+def test_ivfpq_driver_rerank_equals_spark_cosine_bit_for_bit(spark, tmp_path):
+    """The serving probe reranks on the driver. On adversarial vectors
+    its rows equal Spark's own `cosine_similarity` rerank bit for bit,
+    in the same order, under the same join semantics: NaN, +-inf,
+    subnormals, float32 extremes, double under- and overflow, a null
+    element, a length mismatch and a null vector; an id duplicated in
+    `rerank_src` (one row per source row), an id missing from it
+    (dropped), and a duplicated query id (crossed with every
+    candidate of that id). A zero norm raises in both under ANSI mode
+    and gives null in both without it."""
+    import numpy as np
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        _query_rows,
+        build_ivfpq_index,
+        query_ivfpq_index_batch,
+    )
+
+    dim, n = 8, 40
+    rng = np.random.default_rng(11)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+    cents = similarity.train_centroids_exact(
+        corpus, k=2, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(corpus, path, in_dim=dim, m=2, ksub=4, centroids=cents)
+
+    inf, nan, f32max = float("inf"), float("nan"), 3.4028234663852886e38
+
+    def normal():
+        return [float(x) for x in rng.normal(size=dim)]
+
+    adversarial = {
+        0: [[nan] + normal()[1:]],
+        1: [[inf] + normal()[1:]],
+        2: [[-inf] + normal()[1:]],
+        3: [[inf, -inf] + normal()[2:]],
+        4: [[1e-45] * dim],  # float32's smallest subnormal
+        5: [[1.1754942e-38, -1e-45] + normal()[2:]],
+        6: [[f32max] * dim],
+        7: [[f32max, -f32max] + normal()[2:]],
+        8: [[None] + normal()[1:]],
+        9: [normal()[1:]],  # one element short
+        10: [None],
+        11: [normal(), normal()],  # duplicate id, two source rows
+        # 12 is missing from rerank_src
+        13: [[1e-200] + normal()[1:]],  # underflows in double
+        14: [[1e200] + normal()[1:]],  # overflows in double
+    }
+    rows = [
+        (i, v) for i in range(n) if i != 12
+        for v in adversarial.get(i, [normal()])
+    ]
+    q1, q2, q3 = normal(), normal(), normal()
+    queries = spark.createDataFrame(
+        [(20, q1), (21, q2), (20, q3)], "vec_id long, embedding array<float>"
+    )
+    qrows = _query_rows(queries, "vec_id", "embedding")
+    # every code is a candidate (twice for the duplicated query id:
+    # once per LUT row) and every reranked row is returned
+    shape = dict(k=1000, nprobe=2, expand=1)
+    for ddl in ("vec_id long, embedding array<float>",
+                "vec_id int, embedding array<double>"):
+        src = spark.createDataFrame(rows, ddl)
+        got = query_ivfpq_index_batch(
+            spark, path, queries, rerank_src=src, **shape
+        )
+        want = _spark_rerank_rows(spark, path, qrows, src, **shape)
+        assert got.schema["vec_id"].dataType == want.schema["vec_id"].dataType
+        got_rows, want_rows = got.collect(), want.collect()
+        assert _bits(got_rows) == _bits(want_rows)
+        # query 20: 2 candidate rows x 2 query rows per source row
+        assert len(got_rows) == 5 * len(rows)
+        assert sum(1 for q, i, _ in got_rows if (q, i) == (20, 11)) == 8
+        assert not any(i == 12 for _, i, _ in got_rows)
+        scores = [s for _, _, s in got_rows]
+        assert None in scores and any(s != s for s in scores if s is not None)
+
+    zero = spark.createDataFrame(
+        rows + [(12, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        query_ivfpq_index_batch(spark, path, queries, rerank_src=zero, **shape)
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        _spark_rerank_rows(spark, path, qrows, zero, **shape).collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = query_ivfpq_index_batch(
+            spark, path, queries, rerank_src=zero, **shape
+        ).collect()
+        want = _spark_rerank_rows(spark, path, qrows, zero, **shape).collect()
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+    assert _bits(got) == _bits(want)
+    assert any(i == 12 and s is None for _, i, s in got)
+
+
+def test_ivfpq_rebuild_clears_pending_tombstones(spark, tmp_path, store):
+    """A full rebuild from the caller's corpus supersedes pending
+    deletes, as it supersedes a staged split: no stale tombstone hides
+    a rebuilt id from the probe or counts it as deleted."""
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        build_ivfpq_index,
+        delete_from_ivfpq_index,
+        ivfpq_index_stats,
+        query_ivfpq_index,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").filter(
+        F.col("vec_id") < 300
+    )
+    cents = similarity.train_centroids_exact(
+        emb, k=4, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    delete_from_ivfpq_index(
+        spark, emb.filter(F.col("vec_id") == 7).select("vec_id"), path
+    )
+    build_ivfpq_index(emb, path, in_dim=64, m=4, ksub=8, centroids=cents)
+
+    stats = ivfpq_index_stats(spark, path).collect()
+    assert sum(r["n_deleted"] for r in stats) == 0, stats
+    assert sum(r["n_live"] for r in stats) == 300, stats
+    qvec = list(emb.filter(F.col("vec_id") == 7).select("embedding").head()[0])
+    got = query_ivfpq_index(
+        spark, path, qvec, k=10, nprobe=2, expand=10, rerank_src=emb
+    ).collect()
+    assert got[0]["vec_id"] == 7, got
+
+
+def _jobs_run_by(sc, group, fn):
+    """(fn's result, the number of Spark jobs it ran under `group`). A
+    sentinel job under its own group marks the end: the status tracker
+    hears of jobs in submission order, so once it knows the sentinel
+    it knows every job `fn` ran."""
+    import time
+
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sentinel = f"{group}_sentinel"
+    sc.setJobGroup(sentinel, sentinel)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never reached the tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_ivfpq_warm_batch_query_job_budget(spark, tmp_path):
+    """A warm serving batch with pending tombstones runs at most 6
+    Spark jobs (query collect, candidate plan, vector fetch), and the
+    frame it returns is a driver-side snapshot: collecting it runs
+    none."""
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark.operators.pq import (
+        build_ivfpq_index,
+        delete_from_ivfpq_index,
+        query_ivfpq_index_batch,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = similarity.train_centroids_exact(
+        emb, k=16, iters=2
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    build_ivfpq_index(emb, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    delete_from_ivfpq_index(
+        spark, emb.filter(F.col("vec_id") % 11 == 0).select("vec_id"), path
+    )
+    # four live queries and one deleted (22): its own code is gone
+    qs = emb.filter(F.col("vec_id").isin([2, 3, 7, 19, 22]))
+
+    def probe():
+        return query_ivfpq_index_batch(
+            spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb
+        )
+
+    probe().collect()  # warm
+    sc = spark.sparkContext
+    out, n_probe = _jobs_run_by(sc, "warm_batch_query", probe)
+    rows, n_collect = _jobs_run_by(sc, "warm_batch_query_collect", out.collect)
+    assert n_probe <= 6, n_probe
+    assert n_collect == 0, n_collect
+    assert len(rows) == 50 and not any(r["vec_id"] % 11 == 0 for r in rows)

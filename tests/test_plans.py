@@ -860,17 +860,21 @@ def test_unified_manifest_prune_is_metadata_lookup(spark, tmp_path):
 
 def test_ivfpq_batch_probe_plan_shape(spark, tmp_path):
     """The persisted index's serving probe (the benchmark's query op)
-    keeps its plan: one partition-pruned code scan, broadcast joins for
-    the tombstone anti-join, the LUT frame, the candidate list and the
-    query vectors, and exactly two per-query windows (candidate top
-    k*expand, rerank top k) whose exchanges are the only shuffles: the
-    final Q*k rows are ordered in one task, with no range shuffle."""
+    keeps its plan. The candidate plan: one partition-pruned code
+    scan, broadcast joins for the tombstone anti-join and the LUT
+    frame, and one per-query window (top k*expand) whose exchange is
+    the only shuffle. The vector fetch: `rerank_src`'s scan carries
+    the candidate ids as one pushed INSET. The result: a driver-side
+    snapshot (a LocalTableScan, nothing left to run)."""
     import re
 
     from pyspark.sql import functions as F
 
     from fb_ads_bigquery_etl_spark.operators import similarity
     from fb_ads_bigquery_etl_spark.operators.pq import (
+        _probe_candidates,
+        _query_rows,
+        _vectors_of,
         build_ivfpq_index,
         delete_from_ivfpq_index,
         query_ivfpq_index_batch,
@@ -886,14 +890,14 @@ def test_ivfpq_batch_probe_plan_shape(spark, tmp_path):
         spark, emb.filter(F.col("vec_id") % 11 == 0).select("vec_id"), path
     )
     qs = emb.filter(F.col("vec_id").isin([2, 3, 7, 19]))
-    plan = PI.explain_str(
-        query_ivfpq_index_batch(
-            spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb
-        )
+    cand = _probe_candidates(
+        spark, path, _query_rows(qs, "vec_id", "embedding"),
+        k=10, nprobe=2, expand=10,
     )
+    plan = PI.explain_str(cand)
     nc = PI.node_counts(plan)
     assert (nc["Window"], nc["BroadcastHashJoin"], nc["Exchange"]) == (
-        2, 4, 2
+        1, 2, 1
     ), nc
     scans = re.split(r"\n(?=\(\d+\) )", plan)
     pruned = [
@@ -902,3 +906,14 @@ def test_ivfpq_batch_probe_plan_shape(spark, tmp_path):
         and re.search(r"PartitionFilters: \[bucket#\d+ IN", d)
     ]
     assert len(pruned) == 1, plan[:3000]
+
+    ids = sorted({r["id"] for r in cand.collect()})
+    assert len(ids) > 10  # past the IN -> INSET conversion threshold
+    fetch = PI.explain_str(_vectors_of(emb, ids, "vec_id", "embedding"), "simple")
+    assert re.search(r"DataFilters: \[vec_id#\d+L INSET ", fetch), fetch
+    assert "PushedFilters: [In(vec_id, [" in fetch, fetch
+
+    out = query_ivfpq_index_batch(
+        spark, path, qs, k=10, nprobe=2, expand=10, rerank_src=emb
+    )
+    assert PI.node_counts(out) == {"LocalTableScan": 1}, PI.explain_str(out)
