@@ -1406,6 +1406,7 @@ def refresh_ivfpq_manifest(
     *,
     precomputed: dict[int, tuple[int, int, int]] | None = None,
     reset: bool = False,
+    fold: bool = False,
 ) -> DataFrame:
     """Incrementally refresh the index's per-file stats sidecar
     (`<path>_manifest`) — O(changed) END-TO-END: one metadata listing
@@ -1426,7 +1427,10 @@ def refresh_ivfpq_manifest(
     with zero-row files described as (0, NULL, NULL) so they are
     stat'ed ONCE and the manifest converges instead of re-diffing them
     forever. `reset=True` (the full-rebuild writers) skips the diff
-    and overwrites the sidecar with a fresh seq=0 snapshot.
+    and overwrites the sidecar with a fresh seq=0 snapshot;
+    `fold=True` (compaction, whose rewrite always changes files) keeps
+    the diff but writes the whole reconciled live view as that one
+    snapshot instead of appending a segment.
 
     Each live row: (file, suffix, size, mtime, bucket, n_rows, min_id,
     max_id). Every index writer (build / append / streaming publish /
@@ -1489,25 +1493,29 @@ def refresh_ivfpq_manifest(
         for full, suffix, size, mtime, b in need_scan:
             n, lo, hi = scanned[suffix]
             add_rows.append((full, suffix, size, mtime, b, n, lo, hi))
-    seq = maxseq + 1
-    seg_rows = [r + (seq, "add") for r in add_rows] + [
-        (
-            known[s]["file"], s, None, None, None, None, None, None,
-            seq, "drop",
-        )
-        for s in gone
-    ]
-    mode = "overwrite" if (reset or not have_sidecar) else "append"
+    out_rows = [_manifest_row8(live[s]) for s in sorted(live)] + add_rows
+    snapshot = reset or fold or not have_sidecar
+    if snapshot:
+        seg_rows = [r + (0, "add") for r in out_rows]
+    else:
+        seq = maxseq + 1
+        seg_rows = [r + (seq, "add") for r in add_rows] + [
+            (
+                known[s]["file"], s, None, None, None, None, None, None,
+                seq, "drop",
+            )
+            for s in gone
+        ]
     storage.resolve(spark, path).write_rows_atomic(
-        f"{path}_manifest", seg_rows, _MANIFEST_SEG_SCHEMA, mode
+        f"{path}_manifest", seg_rows, _MANIFEST_SEG_SCHEMA,
+        "overwrite" if snapshot else "append",
     )
-    if mode == "append":
+    if not snapshot:
         # fold piled-up segments HERE, on the writer's own refresh —
         # an append-only/streaming workload that is never compacted
         # must not accumulate one sidecar file per batch forever (the
         # fold threshold bounds the history every refresh replays)
         compact_ivfpq_manifest(spark, path)
-    out_rows = [_manifest_row8(live[s]) for s in sorted(live)] + add_rows
     return local_df(spark, out_rows, _MANIFEST_SCHEMA)
 
 
@@ -1786,6 +1794,8 @@ def compact_ivfpq_index(
     # bounded by nlist — a metadata-sized collect
     buckets = sorted(int(r[0]) for r in work.collect())
     if not buckets:
+        if man is not None:
+            compact_ivfpq_manifest(spark, path, max_segments=1)
         _prune_tombstones(spark, path, tomb, man)
         return []
 
@@ -1801,8 +1811,8 @@ def compact_ivfpq_index(
     overwrite_partitions(live, path, partition_col="bucket")
 
     if man is not None:
-        # the refresh folds piled-up manifest segments itself
-        man = refresh_ivfpq_manifest(spark, path, precomputed=pre)
+        # one seq=0 snapshot of the live view, every segment folded
+        man = refresh_ivfpq_manifest(spark, path, precomputed=pre, fold=True)
     _prune_tombstones(spark, path, tomb, man)
     return buckets
 

@@ -26,10 +26,12 @@ def local_df(spark: SparkSession, rows, schema):
     on the driver and sit in the plan as a `LocalTableScan`. The
     RDD-based form (`parallelize` + `createDataFrame(rdd, schema)`)
     maps every row through a Python worker on EVERY scan, so each
-    broadcast build or join of it was a Python job (150-190 ms each in
-    a warm IVF-PQ batch probe on a 4-core box); a local relation's
-    scan runs in the JVM alone (15-25 ms there). Values convert
-    exactly as the row path converts them (`storage.arrow_table`).
+    broadcast build or join of it is a Python job: a warm one over 64
+    rows in 4 slices takes ~0.16 s on a 4-core box under `pydaemon`
+    (~0.33 s under pyspark's own daemon); a local relation's scan runs
+    in the JVM alone (15-25 ms in a warm IVF-PQ batch probe there).
+    Values convert exactly as the row path converts them
+    (`storage.arrow_table`).
 
     A local relation spreads its rows over min(n, default parallelism)
     slices, so a writer that must leave ONE file coalesces first
@@ -56,6 +58,15 @@ def get_spark(
     default 32, sets the master and the default shuffle partitions;
     `SPARK_GRAFT_DRIVER_MEM`, default 8g); any other setting is
     overridden through `extra_conf`.
+
+    Python workers start under `pydaemon`, a wrapper of pyspark's
+    daemon that stops each task's `importlib.invalidate_caches()` from
+    re-reading the directories of `pyspark.zip` and the spark-core jar
+    (0.1-0.3 s of fixed cost per Python-worker task on Python 3.11);
+    an archive is re-read only when it changed. Executors start it
+    with `python -m`, so the package must be importable wherever
+    workers run, as it already must be for the UDF helpers and source
+    classes pickled by reference.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -87,6 +98,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "fb_ads_bigquery_etl_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

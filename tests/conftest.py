@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -20,6 +21,32 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def jobs_run_by(sc, group, fn):
+    """(fn's result, the number of Spark jobs it ran under `group`). A
+    sentinel job under its own group marks the end: the status tracker
+    hears of jobs in submission order, so once it knows the sentinel
+    it knows every job `fn` ran."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sentinel = f"{group}_sentinel"
+    sc.setJobGroup(sentinel, sentinel)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never reached the tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
 
 
 @pytest.fixture(params=["local", "hadoop"])

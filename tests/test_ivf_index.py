@@ -9,7 +9,7 @@ import pytest
 
 from fb_ads_bigquery_etl_spark.operators import similarity
 from fb_ads_bigquery_etl_spark.plans import inspect as PI
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run_by
 
 
 @pytest.fixture(scope="module")
@@ -1908,6 +1908,71 @@ def test_ivfpq_manifest_segments_auto_fold_bounds_history(spark, tmp_path, store
     assert sum(r["n_rows"] for r in man) == spark.read.parquet(path).count()
 
 
+def test_ivfpq_compact_leaves_one_manifest_snapshot(spark, tmp_path, store):
+    """Compaction leaves the manifest sidecar as ONE parquet file, the
+    seq=0 snapshot of the reconciled live view, on its work path and on
+    its no-work path alike: otherwise every append + compact cycle
+    adds two segments until the 8-segment auto-fold."""
+    from pyspark.sql import functions as F
+
+    from fb_ads_bigquery_etl_spark import storage
+    from fb_ads_bigquery_etl_spark.operators import pq
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    base = emb.filter(F.col("vec_id") % 3 != 0)
+    cents = similarity.train_centroids_exact(
+        base, k=8, iters=1
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "ivfpq")
+    pq.build_ivfpq_index(base, path, in_dim=64, m=4, ksub=8, centroids=cents)
+    pq.append_ivfpq_index(spark, emb.filter(F.col("vec_id") % 3 == 0), path)
+    pq.delete_from_ivfpq_index(
+        spark, emb.filter(F.col("vec_id") % 7 == 0).select("vec_id"), path
+    )
+
+    def segments():
+        return [
+            name
+            for _, name, _, _ in storage.resolve(spark, path).list_files(
+                f"{path}_manifest"
+            )
+            if name.endswith(".parquet")
+        ]
+
+    def live_view():
+        return sorted(
+            tuple(r) for r in pq._read_ivfpq_manifest(spark, path).collect()
+        )
+
+    def from_code_files():
+        listed = pq._list_code_files(spark, path)
+        stats = pq._scan_code_file_stats(spark, path, [f[0] for f in listed])
+        return sorted(
+            (full, sfx, size, mtime, int(sfx.split("/")[0][len("bucket="):]))
+            + stats[sfx]
+            for full, sfx, size, mtime in listed
+        )
+
+    assert len(segments()) == 2  # build snapshot + append segment
+    assert pq.compact_ivfpq_index(spark, path)
+    assert len(segments()) == 1
+    assert live_view() == from_code_files()
+
+    # no-work path: a catalog-free compaction applies new deletes
+    # behind the manifest's back, a refresh records that as a second
+    # segment, and the manifest compaction then has nothing to rewrite
+    pq.delete_from_ivfpq_index(
+        spark, emb.filter(F.col("vec_id") % 5 == 0).select("vec_id"), path
+    )
+    assert pq.compact_ivfpq_index(spark, path, use_manifest=False)
+    pq.refresh_ivfpq_manifest(spark, path)
+    assert len(segments()) == 2
+    before = live_view()
+    assert pq.compact_ivfpq_index(spark, path) == []
+    assert len(segments()) == 1
+    assert live_view() == before == from_code_files()
+
+
 def test_ivfpq_split_crash_recovery(spark, tmp_path, monkeypatch, store):
     """A split interrupted AFTER its commit marker lands must (a) gate
     every public verb with a loud 'interrupted bucket split' error —
@@ -2390,34 +2455,6 @@ def test_ivfpq_rebuild_clears_pending_tombstones(spark, tmp_path, store):
     assert got[0]["vec_id"] == 7, got
 
 
-def _jobs_run_by(sc, group, fn):
-    """(fn's result, the number of Spark jobs it ran under `group`). A
-    sentinel job under its own group marks the end: the status tracker
-    hears of jobs in submission order, so once it knows the sentinel
-    it knows every job `fn` ran."""
-    import time
-
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sentinel = f"{group}_sentinel"
-    sc.setJobGroup(sentinel, sentinel)
-    try:
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(sentinel):
-        assert time.monotonic() < deadline, "sentinel job never reached the tracker"
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(group))
-
-
 def test_ivfpq_warm_batch_query_job_budget(spark, tmp_path):
     """A warm serving batch with pending tombstones runs at most 6
     Spark jobs (query collect, candidate plan, vector fetch), and the
@@ -2450,8 +2487,8 @@ def test_ivfpq_warm_batch_query_job_budget(spark, tmp_path):
 
     probe().collect()  # warm
     sc = spark.sparkContext
-    out, n_probe = _jobs_run_by(sc, "warm_batch_query", probe)
-    rows, n_collect = _jobs_run_by(sc, "warm_batch_query_collect", out.collect)
+    out, n_probe = jobs_run_by(sc, "warm_batch_query", probe)
+    rows, n_collect = jobs_run_by(sc, "warm_batch_query_collect", out.collect)
     assert n_probe <= 6, n_probe
     assert n_collect == 0, n_collect
     assert len(rows) == 50 and not any(r["vec_id"] % 11 == 0 for r in rows)

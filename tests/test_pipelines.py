@@ -276,6 +276,47 @@ def test_maintain_table_compacts_and_audits(spark, tmp_path):
     assert spark.read.parquet(table).count() == rep2.rows_processed
 
 
+@pytest.mark.parametrize("table", ["null_key_part", "empty"])
+def test_maintain_table_counts_rows_in_its_audit_scan(spark, tmp_path, monkeypatch, table):
+    """maintain_table's row count comes from its duplicate-key audit
+    (n_keys + excess rows), so after compaction the audit is the one
+    scan it runs: on a table whose key has a null part (nulls group as
+    one key) and on an empty table (no excess rows at all)."""
+    from fb_ads_bigquery_etl_spark import sinks
+    from fb_ads_bigquery_etl_spark.operators.quality import duplicate_key_count
+    from tests.conftest import jobs_run_by
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [("c1", "a1", "2026-01-15", "facebook", 1),
+         ("c1", "a1", "2026-01-15", "facebook", 2),
+         ("c1", None, "2026-01-15", "facebook", 3),
+         ("c1", None, "2026-01-15", "facebook", 4),
+         ("c2", None, "2026-01-16", "instagram", 5)],
+        ", ".join(f"{k} string" for k in KEY) + ", v int",
+    )
+    if table == "empty":
+        df.limit(0).write.parquet(path)
+    else:
+        df.write.partitionBy("date_start").parquet(path)
+
+    rep = pipelines.maintain_table(spark, path)
+    assert rep.rows_processed == read_table(spark, path).count()
+    assert rep.rows_processed == (0 if table == "empty" else 5)
+
+    # compaction stubbed out, the call's jobs are the audit's alone
+    monkeypatch.setattr(sinks, "compact_partition", lambda *a, **k: 1)
+    sc = spark.sparkContext
+    _, n_call = jobs_run_by(
+        sc, f"maintain_{table}", lambda: pipelines.maintain_table(spark, path)
+    )
+    _, n_audit = jobs_run_by(
+        sc, f"audit_{table}",
+        lambda: duplicate_key_count(spark.read.parquet(path), KEY).collect(),
+    )
+    assert n_call == n_audit, (n_call, n_audit)
+
+
 def test_run_daily_reads_source_exactly_once(spark, tmp_path):
     # 2 accounts x 1 day x 3 pages (25 rows / page_size 10) = 6 fetches
     # for a single execution; a recompute-for-count would double it.
